@@ -693,7 +693,8 @@ def _cosine_candidates_driver(
             T.StructField("id_b", id_type, True),
         ]
     )
-    probe = probe[probe["v"].notna()]
+    # NULL ids never pair (id_a < id_b is NULL) and are never dropped
+    probe = probe[probe["v"].notna() & probe["id"].notna()]
     if len(probe) < 2:
         return spark.createDataFrame([], cand_schema)
     try:
@@ -729,7 +730,17 @@ def _cosine_candidates_driver(
     gb = np.concatenate(pairs_b) if pairs_b else np.array([], dtype=int)
     import pandas as pd
 
-    out = pd.DataFrame({"id_a": ids[ga], "id_b": ids[gb]})
+    # Orient each pair by id, not by row position: the caller drops id_b,
+    # so on input not stored in id order a positional pair would drop the
+    # smaller id. Equal ids never pair (the expression's id_a < id_b).
+    ia, ib = ids[ga], ids[gb]
+    a_first, keep = ia < ib, ia != ib
+    out = pd.DataFrame(
+        {
+            "id_a": np.where(a_first, ia, ib)[keep],
+            "id_b": np.where(a_first, ib, ia)[keep],
+        }
+    )
     return spark.createDataFrame(out, cand_schema)
 
 

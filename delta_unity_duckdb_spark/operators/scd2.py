@@ -18,8 +18,9 @@ shuffle-partitioned by key, skew-handled by AQE, no driver-side collection.
 Source batches are deduped on the business keys first (the reference would
 violate its unique index on intra-batch dupes; SURVEY.md §7.7-2). With a
 Delta-enabled cluster the same plan maps to ``DeltaTable.merge`` +
-append; the Parquet-backed ``sync_scd2`` below rewrites the target, which
-is the correct local-mode stand-in.
+append; the Parquet-backed ``sync_scd2`` below is the local-mode
+stand-in: one write job of the new state into a staging directory that
+also yields the summary counts, then a directory swap.
 
 Surrogate key: the reference's ``scd_id SERIAL`` is insertion-ordered;
 a distributed engine cannot cheaply maintain a global counter, so the
@@ -31,9 +32,11 @@ surrogate is derived deterministically at read time via
 from __future__ import annotations
 
 import os
+import shutil
+import uuid
 from collections.abc import Sequence
 
-from pyspark.sql import Column, DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
 SCD_COLS = ("effective_date", "end_date", "is_current", "created_at", "updated_at")
@@ -151,8 +154,15 @@ def sync_scd2(
 ) -> dict:
     """Materializing sync (reference orchestrator delta_to_postgres_scd.py:269-337).
 
-    Reads the Parquet/Delta target if present, applies the SCD2 transition,
-    rewrites the target, returns a summary dict like the reference's.
+    Reads the Parquet target if present, applies the SCD2 transition and
+    writes the new state ONCE, into a sibling staging directory
+    (``<target>.__staging_<token>``): the transition's lineage reads the
+    target's own files, so it cannot overwrite them in place. The summary
+    counts (``total_rows``, ``current_rows``, like the reference's) are an
+    ``Observation`` on that same write job — no cache, no re-read, no
+    count jobs. The staging directory then replaces the target by two
+    renames. A write that fails leaves the previous target as it was and
+    removes the staging directory.
     """
     effective_ts = effective_ts if effective_ts is not None else F.current_timestamp()
     target = None
@@ -161,20 +171,29 @@ def sync_scd2(
     result = scd2_apply(
         target, source, business_keys, tracked_cols, effective_ts, column_mapping
     )
-    # Local-mode materialization: the lineage references the files being
-    # replaced, so stage via an in-memory copy before overwrite.
-    result.persist()
+    counts = Observation()
+    base = target_path.rstrip(os.sep)
+    token = uuid.uuid4().hex[:12]
+    staging, retired = f"{base}.__staging_{token}", f"{base}.__retired_{token}"
     try:
-        result.count()
-        result.write.mode("overwrite").parquet(target_path)
+        result.observe(
+            counts,
+            F.count(F.lit(1)).alias("total_rows"),
+            F.count_if(F.col("is_current")).alias("current_rows"),
+        ).write.parquet(staging)
+        summary = counts.get
+        if target is not None:
+            os.rename(target_path, retired)
+        try:
+            os.rename(staging, target_path)
+        except OSError:
+            if target is not None:
+                os.rename(retired, target_path)
+            raise
     finally:
-        result.unpersist()
-    out = spark.read.parquet(target_path)
-    return {
-        "target_path": target_path,
-        "total_rows": out.count(),
-        "current_rows": out.filter(F.col("is_current")).count(),
-    }
+        shutil.rmtree(staging, ignore_errors=True)
+    shutil.rmtree(retired, ignore_errors=True)
+    return {"target_path": target_path, **summary}
 
 
 def scd2_invariant_violations(scd: DataFrame, business_keys: Sequence[str]) -> dict:

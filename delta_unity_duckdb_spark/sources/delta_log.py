@@ -17,11 +17,13 @@ concurrency. Unsupported (explicitly refused, not silently wrong):
 deletion vectors, column mapping, reader version > 2.
 
 Scale posture: log replay touches ONLY the log (KBs per commit; the
-checkpoint bounds replay length) — never data files. The data read is a
-normal parquet scan over the active file set, so predicate pushdown,
-column pruning, and split planning are unchanged. Partition values ride
-per-file constant columns via a UNION of per-partition reads grouped by
-partition tuple — each branch is one pruned parquet relation.
+checkpoint bounds replay length) — never data files — and runs on the
+driver with no Spark job (pyarrow writes and reads checkpoints). The
+data read is a normal parquet scan over the active file set, so
+predicate pushdown, column pruning, and split planning are unchanged.
+Partition values ride per-file constant columns via a UNION of
+per-partition reads grouped by partition tuple — each branch is one
+pruned parquet relation.
 """
 
 from __future__ import annotations
@@ -32,7 +34,7 @@ import time
 import uuid
 from functools import reduce
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
@@ -280,21 +282,45 @@ class DeltaSnapshot:
         # commitInfo / txn / cdc: no effect on the active file set
 
 
-def _load_checkpoint(
-    spark: SparkSession, log_dir: str, version: int, snap: DeltaSnapshot
-) -> None:
-    """Fold a parquet checkpoint (complete state at ``version``) into snap."""
+def _arrow_to_py(value, typ):
+    """A pyarrow ``to_pylist`` value as plain Python, by its Arrow type:
+    MAP values arrive as lists of (key, value) tuples and become dicts
+    (an empty map becomes ``{}``), at any nesting depth."""
+    import pyarrow as pa
+
+    if value is None:
+        return None
+    if pa.types.is_map(typ):
+        return {k: _arrow_to_py(v, typ.item_type) for k, v in value}
+    if pa.types.is_struct(typ):
+        return {f.name: _arrow_to_py(value.get(f.name), f.type) for f in typ}
+    if pa.types.is_list(typ) or pa.types.is_large_list(typ):
+        return [_arrow_to_py(v, typ.value_type) for v in value]
+    return value
+
+
+def _load_checkpoint(log_dir: str, version: int, snap: DeltaSnapshot) -> None:
+    """Fold a parquet checkpoint (complete state at ``version``) into snap,
+    read with pyarrow on the driver: the checkpoint is log metadata, never
+    data, so no Spark job. Reads checkpoints from any writer, extra action
+    columns (txn, commitInfo, …) included."""
+    import pyarrow.parquet as pq
+
     path = os.path.join(
         log_dir, f"{version:0{_COMMIT_DIGITS}d}.checkpoint.parquet"
     )
-    rows = spark.read.parquet(path).collect()
+    table = pq.read_table(path)
+    keys = [k for k in ("protocol", "metaData", "add", "remove") if k in table.column_names]
+    columns = {
+        k: [_arrow_to_py(v, table.schema.field(k).type) for v in table.column(k).to_pylist()]
+        for k in keys
+    }
     # Checkpoints store one action per row in struct columns; replay order
     # inside a checkpoint is irrelevant (it is already reconciled state),
     # but metaData/protocol must land before being read.
-    for r in rows:
-        d = r.asDict(recursive=True)
-        for key in ("protocol", "metaData", "add", "remove"):
-            sub = d.get(key)
+    for i in range(table.num_rows):
+        for key in keys:
+            sub = columns[key][i]
             # a checkpoint row holds ONE action; the other struct columns
             # are null — which some writers serialize as all-null structs
             if sub is not None and any(v is not None for v in sub.values()):
@@ -325,7 +351,7 @@ def snapshot(
 
     snap = DeltaSnapshot(table_path, version)
     if ckpt_version >= 0:
-        _load_checkpoint(spark, log_dir, ckpt_version, snap)
+        _load_checkpoint(log_dir, ckpt_version, snap)
 
     for v in range(ckpt_version + 1, version + 1):
         cpath = _commit_path(log_dir, v)
@@ -721,64 +747,93 @@ def write_delta(
 _MERGE_KEYSET_CAP = 100_000
 
 
-def _files_possibly_matching(
-    source_df: DataFrame, snap: DeltaSnapshot, on: list[str]
-) -> dict[str, dict]:
-    """Target files that MAY contain a key present in ``source_df``.
+def _probe_source_keys(
+    source_df: DataFrame, on: list[str]
+) -> tuple[list | None, list[tuple[str, str, object]]]:
+    """The merge's one pre-pass over the source: group the non-NULL keys,
+    raise if any key holds more than one row, and return what file pruning
+    needs.
 
-    Single-column keys (the overwhelmingly common merge shape): collect the
-    distinct key set (capped) and probe each file's [min,max] with a binary
-    search — an insert-heavy source no longer stretches one envelope over
-    the whole table, so a merge touching 2 clustered keys rewrites the 1-2
-    files that hold them. Compound keys or oversized key sets fall back to
-    the per-column min/max envelope (still conservative, never wrong)."""
-    part_cols = snap.partition_columns
-
+    Single-column keys (the overwhelmingly common merge shape) return the
+    sorted distinct key set, collected with a ``_MERGE_KEYSET_CAP + 1``
+    limit so the driver list stays bounded. Compound keys, and key sets
+    past the cap, return ``None`` plus the per-column min/max envelope as
+    ``>=``/``<=`` filters, computed by one aggregate over the same groups
+    that also carries the duplicate check."""
+    grouped = (
+        source_df.na.drop(subset=on)
+        .groupBy(*on)
+        .agg(F.count(F.lit(1)).alias("__rows"))
+    )
     if len(on) == 1:
-        k = on[0]
-        keys_df = source_df.na.drop(subset=[k]).select(k).distinct()
-        keys = [r[0] for r in keys_df.limit(_MERGE_KEYSET_CAP + 1).collect()]
-        if not keys:
-            return {}
-        if len(keys) <= _MERGE_KEYSET_CAP:
-            import bisect
+        rows = grouped.limit(_MERGE_KEYSET_CAP + 1).collect()
+        if len(rows) <= _MERGE_KEYSET_CAP:
+            if any(r["__rows"] > 1 for r in rows):
+                raise ValueError("source has multiple rows per merge key")
+            return sorted(r[0] for r in rows), []
 
-            keys.sort()
-
-            def may_match(add: dict) -> bool:
-                if k in part_cols:
-                    return any(
-                        _file_may_match(add, k, "=", key, part_cols) for key in keys
-                    )
-                stats = add.get("stats")
-                if not stats:
-                    return True
-                try:
-                    parsed = json.loads(stats) if isinstance(stats, str) else stats
-                except (TypeError, ValueError):
-                    return True
-                lo = _coerce_like(parsed.get("minValues", {}).get(k), keys[0])
-                hi = _coerce_like(parsed.get("maxValues", {}).get(k), keys[0])
-                if lo is None or hi is None:
-                    return True
-                try:
-                    i = bisect.bisect_left(keys, lo)
-                except TypeError:
-                    return True
-                return i < len(keys) and keys[i] <= hi
-
-            return {p: a for p, a in snap.adds.items() if may_match(a)}
-
-    # Fallback: per-column min/max envelope.
-    bounds = source_df.na.drop(subset=on).agg(
+    bounds = grouped.agg(
+        F.max("__rows").alias("__rows"),
         *[F.min(c).alias(f"lo_{c}") for c in on],
         *[F.max(c).alias(f"hi_{c}") for c in on],
     ).collect()[0]
+    if (bounds["__rows"] or 0) > 1:
+        raise ValueError("source has multiple rows per merge key")
     overlap: list[tuple[str, str, object]] = []
     for c in on:
         lo, hi = bounds[f"lo_{c}"], bounds[f"hi_{c}"]
         if lo is not None:
             overlap.extend([(c, ">=", lo), (c, "<=", hi)])
+    return None, overlap
+
+
+def _files_possibly_matching(
+    snap: DeltaSnapshot,
+    on: list[str],
+    keys: list | None,
+    overlap: list[tuple[str, str, object]],
+) -> dict[str, dict]:
+    """Target files that MAY contain a source key, decided from the log
+    alone (no data IO).
+
+    With the exact key set (``keys``), each file's [min,max] is probed
+    with a binary search — an insert-heavy source no longer stretches one
+    envelope over the whole table, so a merge touching 2 clustered keys
+    rewrites the 1-2 files that hold them. Otherwise the min/max envelope
+    filters (``overlap``) prune (still conservative, never wrong)."""
+    part_cols = snap.partition_columns
+
+    if keys is not None:
+        if not keys:
+            return {}
+        import bisect
+
+        k = on[0]
+
+        def may_match(add: dict) -> bool:
+            if k in part_cols:
+                return any(
+                    _file_may_match(add, k, "=", key, part_cols) for key in keys
+                )
+            stats = add.get("stats")
+            if not stats:
+                return True
+            try:
+                parsed = json.loads(stats) if isinstance(stats, str) else stats
+            except (TypeError, ValueError):
+                return True
+            lo = _coerce_like(parsed.get("minValues", {}).get(k), keys[0])
+            hi = _coerce_like(parsed.get("maxValues", {}).get(k), keys[0])
+            if lo is None or hi is None:
+                return True
+            try:
+                i = bisect.bisect_left(keys, lo)
+            except TypeError:
+                return True
+            return i < len(keys) and keys[i] <= hi
+
+        return {p: a for p, a in snap.adds.items() if may_match(a)}
+
     if not overlap:
         return {}  # all-NULL-key source: nothing can match
     return prune_adds(snap.adds, overlap, part_cols)
@@ -796,15 +851,20 @@ def merge_delta(
     delta_to_postgres_scd.py:242-261 — generalized beyond SCD2):
     copy-on-write at FILE granularity, driven by the per-file stats.
 
-    1. One tiny agg computes the source's key-range envelope.
-    2. ``prune_adds`` keeps only target files whose min/max key ranges
-       overlap that envelope — every other file PROVABLY contains no
-       matching key and is never read, never rewritten. At 100 TB with
-       key-clustered files (compaction/Z-order keep them clustered), a
-       point-ish merge touches a handful of files instead of the table.
-    3. Touched files re-emit: unmatched rows kept, matched rows replaced
-       by the source row (``when_matched="update"``) or dropped
-       (``"delete"``); source rows matching nothing append as inserts.
+    1. One grouped pre-pass over the source (``_probe_source_keys``)
+       checks that no key holds two rows and returns the exact key set
+       (single-column keys within ``_MERGE_KEYSET_CAP``) or the per-column
+       min/max envelope (compound keys, larger key sets).
+    2. The log alone then decides which target files may hold a source
+       key; every other file PROVABLY contains no matching key and is
+       never read, never rewritten. At 100 TB with key-clustered files
+       (compaction/Z-order keep them clustered), a point-ish merge touches
+       a handful of files instead of the table.
+    3. One write job re-emits the touched files: their rows whose key the
+       source lacks, plus the matched source rows (``when_matched=
+       "update"``) and the unmatched ones (``insert_not_matched``).
+       ``rows_matched`` is an ``Observation`` on the touched-rows ⟕
+       source-keys join inside that same job, so no separate count runs.
     4. One atomic commit: removes for touched files + adds for their
        replacements. Readers of the old version are unaffected; time
        travel keeps working.
@@ -829,35 +889,33 @@ def merge_delta(
         raise ValueError(f"merge keys not in schema: {missing}")
     source_df = source_df.select(target_cols)
 
-    dup = (
-        source_df.na.drop(subset=on)
-        .groupBy(*on)
-        .count()
-        .filter(F.col("count") > 1)
-        .limit(1)
-        .count()
-    )
-    if dup:
-        raise ValueError("source has multiple rows per merge key")
-
-    touched = _files_possibly_matching(source_df, snap, on)
+    keys, overlap = _probe_source_keys(source_df, on)
+    touched = _files_possibly_matching(snap, on, keys, overlap)
     untouched = {p: a for p, a in snap.adds.items() if p not in touched}
 
     touched_df = _df_for_adds(spark, snap, touched)
-    matched_keys = touched_df.select(on).join(source_df.select(on), on, "left_semi")
-    kept = touched_df.join(source_df.select(on), on, "left_anti")
-    matched_src = source_df.join(touched_df.select(on), on, "left_semi")
-    inserts = source_df.join(touched_df.select(on), on, "left_anti")
-
+    matched = Observation()
+    # Source keys are unique (checked above), so the left join neither
+    # drops nor repeats a touched row; a flagged row is a matched one.
+    kept = (
+        touched_df.join(source_df.select(*on, F.lit(True).alias("__matched")), on, "left")
+        .observe(matched, F.count_if(F.col("__matched")).alias("n"))
+        .filter(F.col("__matched").isNull())
+        .select(target_cols)
+    )
+    # Updates and inserts stay separate union branches, so they land in
+    # separate files: inserts past the table's key range never widen the
+    # [min,max] of the rewritten key window, and later merges keep
+    # pruning to the files they touch.
     pieces = [kept]
     if when_matched == "update":
-        pieces.append(matched_src)
+        pieces.append(source_df.join(touched_df.select(on), on, "left_semi"))
     if insert_not_matched:
-        pieces.append(inserts)
+        pieces.append(source_df.join(touched_df.select(on), on, "left_anti"))
     new_data = reduce(lambda a, b: a.unionByName(b), pieces)
-    n_matched = matched_keys.count()
 
     adds = _stage_files(new_data, table_path, snap.partition_columns)
+    n_matched = matched.get["n"]
     ts = int(time.time() * 1000)
     actions: list[dict] = [
         {
@@ -1239,116 +1297,112 @@ def write_checkpoint(spark: SparkSession, table_path: str, version: int | None =
     latest) and point ``_last_checkpoint`` at it. Readers then replay only
     newer JSON commits — bounding log-replay cost as commits accumulate
     (the log would otherwise grow O(total commits ever)).
+
+    The snapshot is already a driver-side dict, so pyarrow writes it
+    directly — no Spark job. The file lands under a temporary name and is
+    moved into place with ``os.replace``: readers see the whole checkpoint
+    or none, and a failed write leaves nothing in ``_delta_log``. The
+    layout is the Delta one (one action per row in ``protocol`` /
+    ``metaData`` / ``add`` struct columns, MAP-typed string maps).
     """
-    from pyspark.sql.types import (
-        ArrayType,
-        BooleanType,
-        IntegerType,
-        LongType,
-        MapType,
-        StringType,
-        StructField,
-    )
+    import pyarrow as pa
+    import pyarrow.parquet as pq
 
     log_dir = os.path.join(table_path, "_delta_log")
     snap = snapshot(spark, table_path, version)
     version = snap.version
 
-    proto_t = StructType(
+    str_map = pa.map_(pa.string(), pa.string())
+    ckpt_schema = pa.schema(
         [
-            StructField("minReaderVersion", IntegerType()),
-            StructField("minWriterVersion", IntegerType()),
-        ]
-    )
-    meta_t = StructType(
-        [
-            StructField("id", StringType()),
-            StructField("name", StringType()),
-            StructField("description", StringType()),
-            StructField(
-                "format",
-                StructType(
+            (
+                "protocol",
+                pa.struct(
+                    [("minReaderVersion", pa.int32()), ("minWriterVersion", pa.int32())]
+                ),
+            ),
+            (
+                "metaData",
+                pa.struct(
                     [
-                        StructField("provider", StringType()),
-                        StructField("options", MapType(StringType(), StringType())),
+                        ("id", pa.string()),
+                        ("name", pa.string()),
+                        ("description", pa.string()),
+                        ("format", pa.struct([("provider", pa.string()), ("options", str_map)])),
+                        ("schemaString", pa.string()),
+                        ("partitionColumns", pa.list_(pa.string())),
+                        # configuration MUST round-trip through checkpoints:
+                        # CHECK constraints live in delta.constraints.* keys,
+                        # and a snapshot rebuilt from a checkpoint that
+                        # dropped them would silently stop enforcing (and the
+                        # next overwrite would erase them)
+                        ("configuration", str_map),
+                        ("createdTime", pa.int64()),
                     ]
                 ),
             ),
-            StructField("schemaString", StringType()),
-            StructField("partitionColumns", ArrayType(StringType())),
-            # configuration MUST round-trip through checkpoints: CHECK
-            # constraints live in delta.constraints.* keys, and a snapshot
-            # rebuilt from a checkpoint that dropped them would silently
-            # stop enforcing (and the next overwrite would erase them)
-            StructField("configuration", MapType(StringType(), StringType())),
-            StructField("createdTime", LongType()),
-        ]
-    )
-    add_t = StructType(
-        [
-            StructField("path", StringType()),
-            StructField("partitionValues", MapType(StringType(), StringType())),
-            StructField("size", LongType()),
-            StructField("modificationTime", LongType()),
-            StructField("dataChange", BooleanType()),
-            StructField("stats", StringType()),
-        ]
-    )
-    ckpt_schema = StructType(
-        [
-            StructField("protocol", proto_t),
-            StructField("metaData", meta_t),
-            StructField("add", add_t),
+            (
+                "add",
+                pa.struct(
+                    [
+                        ("path", pa.string()),
+                        ("partitionValues", str_map),
+                        ("size", pa.int64()),
+                        ("modificationTime", pa.int64()),
+                        ("dataChange", pa.bool_()),
+                        ("stats", pa.string()),
+                    ]
+                ),
+            ),
         ]
     )
     proto = snap.protocol or {"minReaderVersion": 1, "minWriterVersion": 2}
     meta = snap.metadata or {}
-    rows: list[tuple] = [
-        ((proto.get("minReaderVersion", 1), proto.get("minWriterVersion", 2)), None, None),
-        (
-            None,
-            (
-                meta.get("id"),
-                meta.get("name"),
-                meta.get("description"),
-                (
-                    (meta.get("format") or {}).get("provider", "parquet"),
-                    dict((meta.get("format") or {}).get("options") or {}),
-                ),
-                meta.get("schemaString"),
-                list(meta.get("partitionColumns") or []),
-                dict(meta.get("configuration") or {}),
-                meta.get("createdTime"),
-            ),
-            None,
-        ),
+    fmt = meta.get("format") or {}
+    rows: list[dict] = [
+        {
+            "protocol": {
+                "minReaderVersion": proto.get("minReaderVersion", 1),
+                "minWriterVersion": proto.get("minWriterVersion", 2),
+            }
+        },
+        {
+            "metaData": {
+                "id": meta.get("id"),
+                "name": meta.get("name"),
+                "description": meta.get("description"),
+                "format": {
+                    "provider": fmt.get("provider", "parquet"),
+                    "options": list((fmt.get("options") or {}).items()),
+                },
+                "schemaString": meta.get("schemaString"),
+                "partitionColumns": list(meta.get("partitionColumns") or []),
+                "configuration": list((meta.get("configuration") or {}).items()),
+                "createdTime": meta.get("createdTime"),
+            }
+        },
     ]
     for add in snap.adds.values():
         rows.append(
-            (
-                None,
-                None,
-                (
-                    add["path"],
-                    dict(add.get("partitionValues") or {}),
-                    int(add.get("size") or 0),
-                    int(add.get("modificationTime") or 0),
-                    bool(add.get("dataChange", True)),
-                    add.get("stats"),
-                ),
-            )
+            {
+                "add": {
+                    "path": add["path"],
+                    "partitionValues": list((add.get("partitionValues") or {}).items()),
+                    "size": int(add.get("size") or 0),
+                    "modificationTime": int(add.get("modificationTime") or 0),
+                    "dataChange": bool(add.get("dataChange", True)),
+                    "stats": add.get("stats"),
+                }
+            }
         )
-    stage = os.path.join(log_dir, f"_ckpt_stage_{uuid.uuid4().hex[:8]}")
-    spark.createDataFrame(rows, ckpt_schema).coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(stage)
-    part = next(f for f in os.listdir(stage) if f.endswith(".parquet"))
     final = os.path.join(log_dir, f"{version:0{_COMMIT_DIGITS}d}.checkpoint.parquet")
-    os.replace(os.path.join(stage, part), final)
-    for root, dirs, files in os.walk(stage, topdown=False):
-        for f_ in files:
-            os.remove(os.path.join(root, f_))
-        os.rmdir(root)
+    tmp = f"{final}.{uuid.uuid4().hex[:8]}.tmp"
+    try:
+        pq.write_table(pa.Table.from_pylist(rows, schema=ckpt_schema), tmp)
+        os.replace(tmp, final)
+    finally:
+        if os.path.exists(tmp):
+            os.remove(tmp)
     with open(os.path.join(log_dir, "_last_checkpoint"), "w") as fh:
         json.dump({"version": version, "size": len(rows)}, fh)
     return version

@@ -161,3 +161,34 @@ def test_embedding_dedup_driver_regime_matches_distributed(spark):
         rows + [(7, [0.0, 0.0, 0.0])], "vec_id long, embedding array<double>"
     )
     assert kept(dfz) == [1, 4, 5, 6, 7]
+
+
+def test_embedding_dedup_independent_of_row_order(spark, monkeypatch):
+    """The driver regime pairs vectors by row position; the result must
+    still follow ids, so a row-permuted input drops the same ids as the
+    id-sorted input and as the distributed ``embedding_cosine_pairs``
+    join."""
+    import numpy as np
+
+    import delta_unity_duckdb_spark.operators.dedup as D
+
+    rng = np.random.default_rng(7)
+    centers = rng.normal(size=(6, 8))
+    rows = [
+        (i, (centers[i % 6] + 0.05 * rng.normal(size=8)).tolist()) for i in range(60)
+    ]
+    permuted = [rows[j] for j in rng.permutation(len(rows))]
+
+    def kept(rows_in):
+        return sorted(
+            r["vec_id"]
+            for r in D.dedup_embedding_cosine(
+                _vec_df(spark, rows_in), "vec_id", "embedding", 0.99
+            ).collect()
+        )
+
+    by_id, by_perm = kept(rows), kept(permuted)
+    monkeypatch.setattr(D, "EMB_DRIVER_MAX_VECTORS", 0)  # distributed join
+    distributed = kept(permuted)
+    assert by_perm == by_id == distributed
+    assert 6 <= len(by_id) < len(rows)  # some ids dropped, every cluster kept

@@ -254,6 +254,55 @@ class TestMaintenance:
         got = read_delta(spark, t)
         assert _rows(got, "id", "k") == [(i, i % 2) for i in range(10)]
 
+    def test_checkpoint_round_trips_every_field(self, spark, tmp_path):
+        """A snapshot rebuilt from the checkpoint alone equals the one
+        replayed from JSON: empty MAPs come back as ``{}``, not as the
+        empty lists pyarrow returns for them."""
+        from delta_unity_duckdb_spark.sources.delta_log import write_checkpoint
+
+        for name, part in (("rt_plain", []), ("rt_part", ["k"])):
+            t = str(tmp_path / name)
+            df = spark.createDataFrame([(i, i % 2) for i in range(10)], ["id", "k"])
+            write_delta(df, t, partition_by=part)
+            write_delta(df, t, partition_by=part)
+            from_json = snapshot(spark, t)
+            write_checkpoint(spark, t)
+            for v in (0, 1):
+                os.remove(os.path.join(t, "_delta_log", f"{v:020d}.json"))
+            from_ckpt = snapshot(spark, t)
+            assert from_ckpt.adds == from_json.adds
+            assert {k: from_ckpt.metadata[k] for k in from_json.metadata} == from_json.metadata
+            assert from_ckpt.protocol == from_json.protocol
+            if not part:
+                assert all(a["partitionValues"] == {} for a in from_ckpt.adds.values())
+                assert from_ckpt.metadata["configuration"] == {}
+                assert from_ckpt.metadata["format"] == {"provider": "parquet", "options": {}}
+
+    def test_failed_checkpoint_write_leaves_log_clean(self, spark, tmp_path, monkeypatch):
+        import pyarrow.parquet as pq
+
+        from delta_unity_duckdb_spark.sources.delta_log import write_checkpoint
+
+        t = str(tmp_path / "ckpt_fail")
+        write_delta(spark.range(0, 4), t)
+        log_dir = os.path.join(t, "_delta_log")
+        before = sorted(os.listdir(log_dir))
+        real_write = pq.write_table
+
+        def write_then_fail(table, where, **kw):
+            real_write(table, where, **kw)
+            raise OSError("disk full")
+
+        monkeypatch.setattr(pq, "write_table", write_then_fail)
+        with pytest.raises(OSError, match="disk full"):
+            write_checkpoint(spark, t)
+        assert sorted(os.listdir(log_dir)) == before
+        monkeypatch.undo()
+        write_checkpoint(spark, t)
+        assert sorted(os.listdir(log_dir)) == sorted(
+            before + [f"{0:020d}.checkpoint.parquet", "_last_checkpoint"]
+        )
+
     def test_vacuum_deletes_only_dead_files(self, spark, tmp_path):
         from delta_unity_duckdb_spark.sources.delta_log import vacuum
 

@@ -4,6 +4,9 @@ rows, one current row per key)."""
 
 from __future__ import annotations
 
+import os
+
+import pytest
 from pyspark.sql import functions as F
 
 from delta_unity_duckdb_spark.operators.scd2 import (
@@ -127,3 +130,47 @@ def test_sync_scd2_materialized_lifecycle(spark, tmp_path):
     # third sync with no changes is a no-op
     s3 = sync_scd2(spark, b2, target, KEYS, TRACKED, ts("2024-03-01 00:00:00"))
     assert (s3["total_rows"], s3["current_rows"]) == (4, 3)
+
+
+def _state(spark, target):
+    return sorted(tuple(r) for r in spark.read.parquet(target).collect())
+
+
+def test_sync_scd2_counts_match_reread(spark, tmp_path):
+    """The summary counts come from the write job itself; they must equal
+    a fresh read of the swapped-in target, and the swap leaves no staging
+    or retired directory beside it."""
+    target = str(tmp_path / "missions_scd")
+    batches = [
+        [(1, "active", "a"), (2, "active", "b")],
+        [(1, "done", "a"), (3, "new", "c")],
+        [(2, None, "b"), (3, "new", "c"), (4, "x", None)],
+    ]
+    for i, rows in enumerate(batches):
+        s = sync_scd2(spark, _batch(spark, rows), target, KEYS, TRACKED,
+                      ts(f"2024-0{i + 1}-01 00:00:00"))
+        out = spark.read.parquet(target)
+        assert (s["total_rows"], s["current_rows"]) == (
+            out.count(),
+            out.filter(F.col("is_current")).count(),
+        )
+    assert (s["total_rows"], s["current_rows"]) == (6, 4)
+    assert os.listdir(tmp_path) == ["missions_scd"]
+
+
+def test_sync_scd2_failed_write_keeps_target(spark, tmp_path):
+    """A sync whose write fails at run time leaves the previous target
+    readable with the same rows and no staging directory behind."""
+    target = str(tmp_path / "missions_scd")
+    sync_scd2(spark, _batch(spark, [(1, "active", "a"), (2, "active", "b")]),
+              target, KEYS, TRACKED, ts("2024-01-01 00:00:00"))
+    before = _state(spark, target)
+    bad = _batch(spark, [(1, "done", "a"), (3, "new", "c")]).withColumn(
+        "status",
+        F.when(F.col("mission_id") == 3, F.raise_error(F.lit("tracked column failed")))
+        .otherwise(F.col("status")),
+    )
+    with pytest.raises(Exception, match="tracked column failed"):
+        sync_scd2(spark, bad, target, KEYS, TRACKED, ts("2024-02-01 00:00:00"))
+    assert _state(spark, target) == before
+    assert os.listdir(tmp_path) == ["missions_scd"]
