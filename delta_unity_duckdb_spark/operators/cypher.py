@@ -163,14 +163,6 @@ def corpus_to_graph(corpus: DataFrame) -> tuple[DataFrame, DataFrame]:
     return vertices, edges
 
 
-def load_corpus_json(spark, path: str) -> DataFrame:
-    """Read a JSON array of {cypher: str} blocks into (block_id, cypher)."""
-    raw = spark.read.option("multiLine", "true").json(path)
-    return raw.select(
-        (F.monotonically_increasing_id()).alias("block_id"), "cypher"
-    )
-
-
 def synthetic_corpus(spark, n_chains: int = 40, chain_len: int = 4) -> DataFrame:
     """Deterministic corpus fixture shaped like the reference data
     (apostrophes in titles, multi-comment arrays, shared parents)."""

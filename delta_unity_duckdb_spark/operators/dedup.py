@@ -277,32 +277,6 @@ def minhash_signatures_wide(
     )
 
 
-def minhash_signatures(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    num_perm: int = 64,
-    shingle_n: int = 3,
-    seed: int = 42,
-) -> DataFrame:
-    """(id, perm, minhash) — long-form view of the wide signatures (one row
-    per document per permutation), for callers that want to aggregate or
-    inspect per-permutation values. Candidate generation does NOT go
-    through this form — ``minhash_near_dups`` bands the wide row directly.
-    """
-    num = num_perm
-    wide = minhash_signatures_wide(df, id_col, text_col, num_perm, shingle_n, seed)
-    pairs = F.array(
-        *[
-            F.struct(F.lit(i).alias("perm"), F.col(f"mh_{i}").alias("mh"))
-            for i in range(num)
-        ]
-    )
-    return wide.select("id", F.explode(pairs).alias("pm")).select(
-        "id", F.col("pm.perm").alias("perm"), F.col("pm.mh").alias("mh")
-    )
-
-
 def minhash_band_buckets(
     df: DataFrame,
     id_col: str,
@@ -515,38 +489,6 @@ def simhash_fingerprints(
             F.lit(1).cast("long") * (2**bit if bit < 63 else -(2**63)),
         ).otherwise(0)
     return votes.select("id", fp.alias("fp"))
-
-
-def simhash64(text_col, shingle_n: int = 2):
-    """Column-expression SimHash (portable md5 bits, majority vote via an
-    aggregate fold). Prefer ``simhash_fingerprints`` for whole-table runs —
-    this form re-walks the shingle array once per bit and only suits
-    single-column contexts where a DataFrame op can't be used."""
-    from delta_unity_duckdb_spark.functions.hashing import hash32_words
-
-    sh = F.array_distinct(_shingles(text_col, shingle_n))
-    hi_lo = F.transform(
-        sh,
-        lambda s: F.struct(
-            hash32_words(s)[0].alias("hi"), hash32_words(s)[1].alias("lo")
-        ),
-    )
-    bit_votes = [
-        F.aggregate(
-            hi_lo,
-            F.lit(0),
-            lambda acc, h: acc
-            + F.shiftright(h["lo"] if bit < 32 else h["hi"], bit % 32)
-            .bitwiseAND(F.lit(1))
-            .cast("int"),
-        )
-        for bit in range(64)
-    ]
-    n = F.size(sh)
-    fp = F.lit(0).cast("long")
-    for bit, votes in enumerate(bit_votes):
-        fp = fp + F.when(votes * 2 > n, F.lit(1).cast("long") * (2**bit if bit < 63 else -(2**63))).otherwise(0)
-    return fp
 
 
 def simhash_near_dups(

@@ -11,10 +11,17 @@ sees a plain parquet relation with full pushdown/pruning.
 
 Supported: JSON commits, parquet checkpoints (`_last_checkpoint`),
 add/remove reconciliation, schemaString → StructType, partition-column
-recovery from ``partitionValues``, time travel (``version=``), and a
-single-writer append/overwrite commit path with O_EXCL optimistic
-concurrency. Unsupported (explicitly refused, not silently wrong):
-deletion vectors, column mapping, reader version > 2.
+recovery from ``partitionValues``, time travel (``version=``), and one
+commit path shared by every writing operation (``_commit``: a fully
+written temp file published as the next ``N.json`` with ``os.link``,
+which fails if that version exists). A commit that loses the version
+race moves to the next version only when it is a blind append (a plain
+write that adds files and nothing else) and none of the commits it lost
+to carries ``metaData`` or ``protocol``; any other lost race raises
+``DeltaProtocolError`` (Delta's conflict rule for a blind append;
+everything else read a snapshot that is now stale).
+Unsupported (explicitly refused, not silently wrong): deletion vectors,
+column mapping, reader version > 2.
 
 Scale posture: log replay touches ONLY the log (KBs per commit; the
 checkpoint bounds replay length) — never data files — and runs on the
@@ -30,8 +37,10 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import time
 import uuid
+from collections.abc import Collection, Iterator, Sequence
 from functools import reduce
 
 from pyspark.sql import DataFrame, Observation, SparkSession
@@ -53,12 +62,44 @@ def _commit_path(log_dir: str, version: int) -> str:
 
 
 def _list_commit_versions(log_dir: str) -> list[int]:
+    if not os.path.isdir(log_dir):
+        return []
     out = []
     for f in os.listdir(log_dir):
         base = f.split(".")[0]
         if f.endswith(".json") and base.isdigit() and len(base) == _COMMIT_DIGITS:
             out.append(int(base))
     return sorted(out)
+
+
+def _checkpoint_version(log_dir: str) -> int:
+    """Version named by ``_last_checkpoint``; -1 when there is none."""
+    path = os.path.join(log_dir, "_last_checkpoint")
+    if not os.path.exists(path):
+        return -1
+    with open(path) as fh:
+        return json.load(fh)["version"]
+
+
+def _latest_version(log_dir: str) -> int:
+    """Latest version of the log: its newest JSON commit or, for a table
+    whose commits were cleaned up after a checkpoint, the checkpoint;
+    -1 for an empty or missing log."""
+    versions = _list_commit_versions(log_dir)
+    return max(versions[-1] if versions else -1, _checkpoint_version(log_dir))
+
+
+def _read_commit(log_dir: str, version: int) -> Iterator[dict]:
+    """The actions of commit ``version``, in file order, parsed one line
+    at a time so a caller that finds what it needs can stop early."""
+    try:
+        fh = open(_commit_path(log_dir, version))
+    except FileNotFoundError:
+        raise FileNotFoundError(f"missing commit {version} in {log_dir}") from None
+    with fh:
+        for line in fh:
+            if line.strip():
+                yield json.loads(line)
 
 
 def _file_stats_json(path: str) -> str | None:
@@ -334,36 +375,18 @@ def snapshot(
     log_dir = os.path.join(table_path, "_delta_log")
     if not os.path.isdir(log_dir):
         raise FileNotFoundError(f"not a Delta table (no _delta_log): {table_path}")
-    versions = _list_commit_versions(log_dir)
-    ckpt_available = -1
-    last_ckpt = os.path.join(log_dir, "_last_checkpoint")
-    if os.path.exists(last_ckpt):
-        with open(last_ckpt) as fh:
-            ckpt_available = json.load(fh)["version"]
     if version is None:
-        # A fully log-cleaned table can hold ONLY a checkpoint — the
-        # checkpoint alone defines the latest state then.
-        if not versions and ckpt_available < 0:
-            raise FileNotFoundError(f"empty _delta_log in {table_path}")
-        version = max(versions[-1] if versions else -1, ckpt_available)
-
-    ckpt_version = ckpt_available if 0 <= ckpt_available <= version else -1
+        version = table_version(table_path)
+    ckpt_version = _checkpoint_version(log_dir)
+    if ckpt_version > version:
+        ckpt_version = -1
 
     snap = DeltaSnapshot(table_path, version)
     if ckpt_version >= 0:
         _load_checkpoint(log_dir, ckpt_version, snap)
-
     for v in range(ckpt_version + 1, version + 1):
-        cpath = _commit_path(log_dir, v)
-        if not os.path.exists(cpath):
-            if v in (0, ckpt_version + 1) and ckpt_version >= 0:
-                continue  # commits before/at the checkpoint may be vacuumed
-            raise FileNotFoundError(f"missing commit {v} in {log_dir}")
-        with open(cpath) as fh:
-            for line in fh:
-                line = line.strip()
-                if line:
-                    snap._apply(json.loads(line))
+        for action in _read_commit(log_dir, v):
+            snap._apply(action)
     return snap
 
 
@@ -384,21 +407,12 @@ def version_at_timestamp(table_path: str, ts) -> int:
     best: int | None = None
     prev_effective: int | None = None
     for v in versions:
-        cpath = _commit_path(log_dir, v)
-        commit_ts: int | None = None
-        with open(cpath) as fh:
-            # external Delta writers are not required to put commitInfo
-            # first — scan every action of the commit for it
-            for line in fh:
-                line = line.strip()
-                if not line:
-                    continue
-                action = json.loads(line)
-                if "commitInfo" in action:
-                    commit_ts = action["commitInfo"].get("timestamp")
-                    break
+        # external Delta writers are not required to put commitInfo
+        # first — scan every action of the commit for it
+        info = next((a["commitInfo"] for a in _read_commit(log_dir, v) if "commitInfo" in a), {})
+        commit_ts = info.get("timestamp")
         if commit_ts is None:
-            commit_ts = int(os.path.getmtime(cpath) * 1000)
+            commit_ts = int(os.path.getmtime(_commit_path(log_dir, v)) * 1000)
         # Delta's monotonicity adjustment: writer clock skew can emit
         # out-of-order commitInfo timestamps; the effective timestamp of a
         # version is clamped to be >= its predecessor's so the
@@ -454,20 +468,13 @@ def read_delta(
     if skip_filters:
         adds = prune_adds(adds, skip_filters, snap.partition_columns)
 
-    def refilter(df: DataFrame) -> DataFrame:
+    df = _df_for_adds(spark, snap, adds)
+    if skip_filters:
         # Stats pruning is file-granular; rows inside surviving files
-        # still need the predicate. Same expressions → Catalyst pushes
-        # them into the parquet scan (PushedFilters).
-        for c, op, v in skip_filters or []:
-            col = F.col(c)
-            expr = {
-                "=": col == v, "!=": col != v, "<": col < v,
-                "<=": col <= v, ">": col > v, ">=": col >= v,
-            }[op]
-            df = df.filter(expr)
-        return df
-
-    return refilter(_df_for_adds(spark, snap, adds))
+        # still need the predicate, which Catalyst pushes into the
+        # parquet scan (PushedFilters).
+        df = df.filter(_predicate_expr(skip_filters))
+    return df
 
 
 def _df_for_adds(
@@ -494,27 +501,52 @@ def _df_for_adds(
 
     field_type = {f.name: f.dataType for f in schema.fields}
     branches = []
-    for key, paths in sorted(by_part.items()):
+    # NULL partition values (None) sort after every string
+    for key, paths in sorted(
+        by_part.items(), key=lambda kv: [(v is None, v or "") for v in kv[0]]
+    ):
         df = spark.read.schema(data_schema).parquet(*paths)
         for c, raw in zip(part_cols, key):
             # partitionValues serialize as strings (or null); cast back
-            df = df.withColumn(
-                c, F.lit(raw).cast(field_type[c]) if raw is not None else F.lit(None).cast(field_type[c])
-            )
+            df = df.withColumn(c, F.lit(raw).cast(field_type[c]))
         branches.append(df.select([f.name for f in schema.fields]))
     return reduce(lambda a, b: a.unionByName(b), branches)
 
 
 def table_version(table_path: str) -> int:
     """Latest committed version (reference getTableStats analogue)."""
-    versions = _list_commit_versions(os.path.join(table_path, "_delta_log"))
-    if not versions:
+    version = _latest_version(os.path.join(table_path, "_delta_log"))
+    if version < 0:
         raise FileNotFoundError(f"empty _delta_log in {table_path}")
-    return versions[-1]
+    return version
 
 
 def _schema_to_string(schema: StructType) -> str:
     return json.dumps(schema.jsonValue())
+
+
+def _add_action(table_path: str, rel: str, data_change: bool = True) -> dict:
+    """The add action for data file ``rel`` (relative to the table):
+    partition values from its Hive-style ``k=v`` directories (Spark's
+    ``__HIVE_DEFAULT_PARTITION__`` is NULL), size, modification time and
+    footer stats."""
+    full = os.path.join(table_path, rel)
+    part_values: dict[str, str | None] = {}
+    for seg in os.path.dirname(rel).split(os.sep):
+        k, eq, v = seg.partition("=")
+        if eq:
+            part_values[k] = None if v == "__HIVE_DEFAULT_PARTITION__" else v
+    add = {
+        "path": rel.replace(os.sep, "/"),
+        "partitionValues": part_values,
+        "size": os.path.getsize(full),
+        "modificationTime": int(os.path.getmtime(full) * 1000),
+        "dataChange": data_change,
+    }
+    stats = _file_stats_json(full)
+    if stats:
+        add["stats"] = stats
+    return {"add": add}
 
 
 def _stage_files(
@@ -524,51 +556,30 @@ def _stage_files(
     data_change: bool = True,
 ) -> list[dict]:
     """Write ``df`` as parquet into the table directory under unique names
-    (invisible until committed) and return the add actions, stats included."""
+    (invisible until committed) and return the add actions, stats included.
+    The staging directory is removed whether or not the write succeeds."""
     stage_token = uuid.uuid4().hex[:12]
     stage_dir = os.path.join(table_path, f"_staging_{stage_token}")
     writer = df.write.mode("overwrite")
     if partition_by:
         writer = writer.partitionBy(*partition_by)
-    writer.parquet(stage_dir)
-
-    adds: list[dict] = []
-    for root, _dirs, files in os.walk(stage_dir):
-        for fname in files:
-            if not fname.endswith(".parquet"):
-                continue
-            src = os.path.join(root, fname)
-            rel_dir = os.path.relpath(root, stage_dir)
-            part_values: dict[str, str | None] = {}
-            if rel_dir != ".":
-                for seg in rel_dir.split(os.sep):
-                    k, _, v = seg.partition("=")
-                    part_values[k] = None if v == "__HIVE_DEFAULT_PARTITION__" else v
-            rel_target = (
-                os.path.join(rel_dir, f"{stage_token}-{fname}")
-                if rel_dir != "."
-                else f"{stage_token}-{fname}"
-            )
-            dst = os.path.join(table_path, rel_target)
-            os.makedirs(os.path.dirname(dst), exist_ok=True)
-            os.rename(src, dst)
-            add_action = {
-                "path": rel_target.replace(os.sep, "/"),
-                "partitionValues": part_values,
-                "size": os.path.getsize(dst),
-                "modificationTime": int(time.time() * 1000),
-                "dataChange": data_change,
-            }
-            stats = _file_stats_json(dst)
-            if stats:
-                add_action["stats"] = stats
-            adds.append({"add": add_action})
-    # clean the now-empty staging tree
-    for root, dirs, files in os.walk(stage_dir, topdown=False):
-        for f_ in files:
-            os.remove(os.path.join(root, f_))
-        os.rmdir(root)
-    return adds
+    try:
+        writer.parquet(stage_dir)
+        adds: list[dict] = []
+        for root, _dirs, files in os.walk(stage_dir):
+            for fname in files:
+                if not fname.endswith(".parquet"):
+                    continue
+                rel = os.path.normpath(
+                    os.path.join(os.path.relpath(root, stage_dir), f"{stage_token}-{fname}")
+                )
+                dst = os.path.join(table_path, rel)
+                os.makedirs(os.path.dirname(dst), exist_ok=True)
+                os.rename(os.path.join(root, fname), dst)
+                adds.append(_add_action(table_path, rel, data_change))
+        return adds
+    finally:
+        shutil.rmtree(stage_dir, ignore_errors=True)
 
 
 def write_delta(
@@ -583,11 +594,13 @@ def write_delta(
 
     Two phases, crash-safe in the Delta sense: (1) write parquet data
     files into the table directory under unique names — invisible until
-    committed; (2) append commit ``N.json`` with O_CREAT|O_EXCL, so two
-    concurrent writers race on the file create and the loser retries at
-    N+1 (optimistic concurrency, single-filesystem scope). ``overwrite``
-    emits remove actions for the previous snapshot's files in the same
-    atomic commit.
+    committed; (2) append commit ``N.json`` through ``_commit``, so two
+    concurrent writers race on the file create. A losing plain append
+    retries at N+1 unless the winner changed the table's metaData or
+    protocol; a losing overwrite, table creation or schema-evolving
+    append raises ``DeltaProtocolError`` (optimistic concurrency,
+    single-filesystem scope). ``overwrite`` emits remove actions for the
+    previous snapshot's files in the same atomic commit.
 
     Appends enforce the table schema by name: a DataFrame with extra or
     missing columns is rejected unless ``merge_schema=True`` (Delta's
@@ -600,20 +613,9 @@ def write_delta(
         raise ValueError(f"mode must be append|overwrite, got {mode!r}")
     partition_by = list(partition_by or [])
     spark = df.sparkSession
-    log_dir = os.path.join(table_path, "_delta_log")
-    os.makedirs(log_dir, exist_ok=True)
-    existing = _list_commit_versions(log_dir)
-    # A vacuumed table can have a checkpoint but no JSON commits — the
-    # checkpoint alone proves the table exists at that version.
-    latest: int | None = existing[-1] if existing else None
-    ckpt_file = os.path.join(log_dir, "_last_checkpoint")
-    if os.path.exists(ckpt_file):
-        with open(ckpt_file) as fh:
-            ckpt_v = json.load(fh)["version"]
-        latest = ckpt_v if latest is None else max(latest, ckpt_v)
-
+    latest = _latest_version(os.path.join(table_path, "_delta_log"))
     prev: DeltaSnapshot | None = None
-    if latest is not None:
+    if latest >= 0:
         prev = snapshot(spark, table_path, latest)
         if prev.partition_columns != partition_by:
             raise ValueError(
@@ -687,19 +689,10 @@ def write_delta(
 
     adds = _stage_files(df, table_path, partition_by)
 
-    actions: list[dict] = [
-        {
-            "commitInfo": {
-                "timestamp": int(time.time() * 1000),
-                "operation": "WRITE",
-                "operationParameters": {"mode": mode},
-                "engineInfo": "delta_unity_duckdb_spark minimal-writer",
-            }
-        }
-    ]
-    if latest is None:
+    actions: list[dict] = []
+    if prev is None:
         actions.append({"protocol": {"minReaderVersion": 1, "minWriterVersion": 2}})
-    if latest is None or mode == "overwrite":
+    if prev is None or mode == "overwrite":
         # Overwrite replaces schema + data but NOT table identity or
         # configuration (constraints survive an INSERT OVERWRITE).
         prev_meta = (prev.metadata or {}) if prev is not None else {}
@@ -718,27 +711,75 @@ def write_delta(
         )
     if evolved_metadata is not None:
         actions.append({"metaData": evolved_metadata})
-    if mode == "overwrite" and prev is not None:
-        ts = int(time.time() * 1000)
-        for path in prev.adds:
-            actions.append(
-                {"remove": {"path": path, "deletionTimestamp": ts, "dataChange": True}}
-            )
-    actions.extend(adds)
+    removes = prev.adds if mode == "overwrite" and prev is not None else ()
+    return _commit(
+        table_path, latest, "WRITE", {"mode": mode}, None, actions, removes, adds
+    )
 
-    # Phase 2: atomic commit with optimistic retry.
-    next_version = (latest + 1) if latest is not None else 0
-    payload = "\n".join(json.dumps(a, separators=(",", ":")) for a in actions) + "\n"
-    while True:
-        cpath = _commit_path(log_dir, next_version)
-        try:
-            fd = os.open(cpath, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-        except FileExistsError:
-            next_version += 1  # lost the race — retry on top of the new commit
-            continue
+
+def _commit(
+    table_path: str,
+    read_version: int,
+    operation: str,
+    params: dict | None,
+    metrics: dict | None,
+    actions: list[dict],
+    removes: Collection[str] = (),
+    adds: Sequence[dict] = (),
+    data_change: bool = True,
+) -> int:
+    """Commit one transaction on top of ``read_version`` (-1 for a new
+    table) and return the version it landed at.
+
+    The commit file holds ``commitInfo``, then ``actions`` (protocol /
+    metaData), then one remove per path in ``removes``, then ``adds``;
+    commitInfo and the removes share one timestamp. The payload is
+    written to a temp file in ``_delta_log`` and published with
+    ``os.link``, which fails if the target exists: of two writers racing
+    for a version exactly one wins, and nobody ever sees a partly written
+    commit. The loser moves on to the next version only as a blind append
+    — a WRITE of nothing but adds — and only past commits that carry no
+    ``metaData`` or ``protocol`` (its schema and constraint checks would
+    be stale); anything else read a snapshot that is no longer current
+    and raises ``DeltaProtocolError``."""
+    log_dir = os.path.join(table_path, "_delta_log")
+    os.makedirs(log_dir, exist_ok=True)
+    ts = int(time.time() * 1000)
+    info: dict = {"timestamp": ts, "operation": operation}
+    if params is not None:
+        info["operationParameters"] = params
+    if metrics is not None:
+        info["operationMetrics"] = metrics
+    info["engineInfo"] = "delta_unity_duckdb_spark minimal-writer"
+    remove_actions = [
+        {"remove": {"path": p, "deletionTimestamp": ts, "dataChange": data_change}}
+        for p in removes
+    ]
+    payload = [{"commitInfo": info}, *actions, *remove_actions, *adds]
+    text = "\n".join(json.dumps(a, separators=(",", ":")) for a in payload) + "\n"
+    # a MERGE with nothing to remove still read the table to find that no
+    # key matched, so only a plain WRITE can be a blind append
+    blind_append = operation == "WRITE" and not actions and not removes
+    tmp = os.path.join(log_dir, f".{uuid.uuid4().hex}.json.tmp")
+    fd = os.open(tmp, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
+    try:
         with os.fdopen(fd, "w") as fh:
-            fh.write(payload)
-        return next_version
+            fh.write(text)
+        version = read_version + 1
+        while True:
+            try:
+                os.link(tmp, _commit_path(log_dir, version))
+                return version
+            except FileExistsError:
+                if not blind_append or any(
+                    "metaData" in a or "protocol" in a for a in _read_commit(log_dir, version)
+                ):
+                    raise DeltaProtocolError(
+                        f"concurrent commit at version {version}; re-run the {operation}"
+                    ) from None
+                version += 1
+    finally:
+        os.unlink(tmp)
 
 
 # Above this many distinct single-column keys, merge pruning falls back
@@ -916,46 +957,27 @@ def merge_delta(
 
     adds = _stage_files(new_data, table_path, snap.partition_columns)
     n_matched = matched.get["n"]
-    ts = int(time.time() * 1000)
-    actions: list[dict] = [
+    version = _commit(
+        table_path,
+        snap.version,
+        "MERGE",
         {
-            "commitInfo": {
-                "timestamp": ts,
-                "operation": "MERGE",
-                "operationParameters": {
-                    "predicate": " AND ".join(f"t.{k} = s.{k}" for k in on),
-                    "whenMatched": when_matched,
-                    "insertNotMatched": insert_not_matched,
-                },
-                "operationMetrics": {
-                    "numTargetFilesRemoved": len(touched),
-                    "numTargetFilesAdded": len(adds),
-                    "numTargetFilesSkipped": len(untouched),
-                    "numMatchedRows": n_matched,
-                },
-                "engineInfo": "delta_unity_duckdb_spark minimal-writer",
-            }
-        }
-    ]
-    for path in touched:
-        actions.append(
-            {"remove": {"path": path, "deletionTimestamp": ts, "dataChange": True}}
-        )
-    actions.extend(adds)
-
-    log_dir = os.path.join(table_path, "_delta_log")
-    payload = "\n".join(json.dumps(a, separators=(",", ":")) for a in actions) + "\n"
-    cpath = _commit_path(log_dir, snap.version + 1)
-    try:
-        fd = os.open(cpath, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-    except FileExistsError:
-        raise DeltaProtocolError(
-            f"concurrent commit at version {snap.version + 1}; re-run the merge"
-        ) from None
-    with os.fdopen(fd, "w") as fh:
-        fh.write(payload)
+            "predicate": " AND ".join(f"t.{k} = s.{k}" for k in on),
+            "whenMatched": when_matched,
+            "insertNotMatched": insert_not_matched,
+        },
+        {
+            "numTargetFilesRemoved": len(touched),
+            "numTargetFilesAdded": len(adds),
+            "numTargetFilesSkipped": len(untouched),
+            "numMatchedRows": n_matched,
+        },
+        [],
+        touched,
+        adds,
+    )
     return {
-        "version": snap.version + 1,
+        "version": version,
         "files_rewritten": len(touched),
         "files_skipped": len(untouched),
         "files_added": len(adds),
@@ -1014,43 +1036,23 @@ def _rewrite_matching(
     new_data = kept.unionByName(replacement) if replacement is not None else kept
 
     adds = _stage_files(new_data, table_path, snap.partition_columns)
-    ts = int(time.time() * 1000)
-    actions: list[dict] = [
+    version = _commit(
+        table_path,
+        snap.version,
+        operation,
+        {"predicate": " AND ".join(f"{c} {op} {v!r}" for c, op, v in where)},
         {
-            "commitInfo": {
-                "timestamp": ts,
-                "operation": operation,
-                "operationParameters": {
-                    "predicate": " AND ".join(f"{c} {op} {v!r}" for c, op, v in where)
-                },
-                "operationMetrics": {
-                    "numAffectedRows": n_affected,
-                    "numTargetFilesRemoved": len(touched),
-                    "numTargetFilesAdded": len(adds),
-                    "numTargetFilesSkipped": len(untouched),
-                },
-                "engineInfo": "delta_unity_duckdb_spark minimal-writer",
-            }
-        }
-    ]
-    for path in touched:
-        actions.append(
-            {"remove": {"path": path, "deletionTimestamp": ts, "dataChange": True}}
-        )
-    actions.extend(adds)
-    log_dir = os.path.join(table_path, "_delta_log")
-    payload = "\n".join(json.dumps(a, separators=(",", ":")) for a in actions) + "\n"
-    cpath = _commit_path(log_dir, snap.version + 1)
-    try:
-        fd = os.open(cpath, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-    except FileExistsError:
-        raise DeltaProtocolError(
-            f"concurrent commit at version {snap.version + 1}; re-run"
-        ) from None
-    with os.fdopen(fd, "w") as fh:
-        fh.write(payload)
+            "numAffectedRows": n_affected,
+            "numTargetFilesRemoved": len(touched),
+            "numTargetFilesAdded": len(adds),
+            "numTargetFilesSkipped": len(untouched),
+        },
+        [],
+        touched,
+        adds,
+    )
     return {
-        "version": snap.version + 1,
+        "version": version,
         "rows_affected": n_affected,
         "files_rewritten": len(touched),
         "files_skipped": len(untouched),
@@ -1114,25 +1116,11 @@ def read_delta_changes(
     if to_version is None:
         to_version = table_version(table_path)
     base = snapshot(spark, table_path, from_version)  # schema + partitioning
-    schema = base.schema
-    part_cols = base.partition_columns
-    data_fields = [f for f in schema.fields if f.name not in part_cols]
-    data_schema = StructType(data_fields)
-    field_type = {f.name: f.dataType for f in schema.fields}
 
     branches = []
     for v in range(from_version + 1, to_version + 1):
-        cpath = _commit_path(log_dir, v)
-        if not os.path.exists(cpath):
-            raise FileNotFoundError(f"missing commit {v} in {log_dir}")
-        with open(cpath) as fh:
-            commit_actions = [
-                json.loads(line) for line in fh if line.strip()
-            ]
-        # action order within a commit is writer-defined — apply the
-        # commit's metaData (if any) before reading its adds
-        commit_actions.sort(key=lambda a: 0 if "metaData" in a else 1)
-        for action in commit_actions:
+        adds: dict[str, dict] = {}
+        for action in _read_commit(log_dir, v):
             if "remove" in action:
                 raise DeltaProtocolError(
                     f"commit {v} removes files — not append-only; "
@@ -1141,35 +1129,21 @@ def read_delta_changes(
             if "metaData" in action:
                 # schema evolution inside the CDC range: adds committed
                 # with (or after) the new metaData carry the evolved
-                # schema — re-derive the read schema HERE, or the new
+                # schema — plan this commit's files with it, or the new
                 # column's values would silently read as dropped
                 base.metadata = action["metaData"]
-                schema = base.schema
-                part_cols = base.partition_columns
-                data_fields = [
-                    f for f in schema.fields if f.name not in part_cols
-                ]
-                data_schema = StructType(data_fields)
-                field_type = {f.name: f.dataType for f in schema.fields}
-            if "add" not in action:
-                continue
-            add = action["add"]
-            df = spark.read.schema(data_schema).parquet(
-                os.path.join(table_path, add["path"])
-            )
-            for c in part_cols:
-                raw = add.get("partitionValues", {}).get(c)
-                df = df.withColumn(c, F.lit(raw).cast(field_type[c]))
+            elif "add" in action:
+                adds[action["add"]["path"]] = action["add"]
+        if adds:
             branches.append(
-                df.select([f.name for f in schema.fields]).withColumn(
+                _df_for_adds(spark, base, adds).withColumn(
                     "_commit_version", F.lit(v).cast("long")
                 )
             )
     if not branches:
-        empty = spark.createDataFrame([], schema).withColumn(
+        return spark.createDataFrame([], base.schema).withColumn(
             "_commit_version", F.lit(None).cast("long")
         )
-        return empty
     # allowMissingColumns: pre-evolution batches surface NULL for columns
     # added mid-range (Delta CDF semantics for merge_schema appends)
     return reduce(
@@ -1248,44 +1222,27 @@ def optimize_delta(
         out = df.repartition(n_out)
 
     adds = _stage_files(out, table_path, snap.partition_columns, data_change=False)
-    ts = int(time.time() * 1000)
-    actions: list[dict] = [
+    version = _commit(
+        table_path,
+        snap.version,
+        "OPTIMIZE",
         {
-            "commitInfo": {
-                "timestamp": ts,
-                "operation": "OPTIMIZE",
-                "operationParameters": {
-                    "zOrderBy": list(zorder_by or []),
-                    "sortBy": list(sort_by or []),
-                    "targetFileBytes": target_file_bytes,
-                },
-                "operationMetrics": {
-                    "numRemovedFiles": len(scope),
-                    "numAddedFiles": len(adds),
-                    "numConsideredFiles": len(snap.adds),
-                },
-                "engineInfo": "delta_unity_duckdb_spark minimal-writer",
-            }
-        }
-    ]
-    for path in scope:
-        actions.append(
-            {"remove": {"path": path, "deletionTimestamp": ts, "dataChange": False}}
-        )
-    actions.extend(adds)
-    log_dir = os.path.join(table_path, "_delta_log")
-    payload = "\n".join(json.dumps(a, separators=(",", ":")) for a in actions) + "\n"
-    cpath = _commit_path(log_dir, snap.version + 1)
-    try:
-        fd = os.open(cpath, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-    except FileExistsError:
-        raise DeltaProtocolError(
-            f"concurrent commit at version {snap.version + 1}; re-run"
-        ) from None
-    with os.fdopen(fd, "w") as fh:
-        fh.write(payload)
+            "zOrderBy": list(zorder_by or []),
+            "sortBy": list(sort_by or []),
+            "targetFileBytes": target_file_bytes,
+        },
+        {
+            "numRemovedFiles": len(scope),
+            "numAddedFiles": len(adds),
+            "numConsideredFiles": len(snap.adds),
+        },
+        [],
+        scope,
+        adds,
+        data_change=False,
+    )
     return {
-        "version": snap.version + 1,
+        "version": version,
         "files_removed": len(scope),
         "files_added": len(adds),
         "bytes": total_bytes,
@@ -1443,79 +1400,35 @@ def convert_to_delta(spark: SparkSession, parquet_path: str) -> int:
     """
     if os.path.isdir(os.path.join(parquet_path, "_delta_log")):
         raise ValueError(f"already a Delta table: {parquet_path}")
-    data_files: list[tuple[str, dict[str, str]]] = []
-    part_cols: list[str] | None = None
+    rels: list[str] = []
     for root, dirs, files in os.walk(parquet_path):
         dirs[:] = [d for d in dirs if not d.startswith("_")]
-        for fname in files:
-            if not fname.endswith(".parquet"):
-                continue
-            rel_dir = os.path.relpath(root, parquet_path)
-            pvals: dict[str, str] = {}
-            if rel_dir != ".":
-                for seg in rel_dir.split(os.sep):
-                    k, eq, v = seg.partition("=")
-                    if eq:
-                        pvals[k] = v
-            cols = sorted(pvals)
-            if part_cols is None:
-                part_cols = cols
-            elif cols != part_cols:
-                raise ValueError(
-                    f"inconsistent partition layout: {cols} vs {part_cols}"
-                )
-            data_files.append(
-                (os.path.normpath(os.path.join(rel_dir, fname)), pvals)
-            )
-    if not data_files:
+        rel_dir = os.path.relpath(root, parquet_path)
+        rels.extend(
+            os.path.normpath(os.path.join(rel_dir, f)) for f in files if f.endswith(".parquet")
+        )
+    if not rels:
         raise FileNotFoundError(f"no parquet files under {parquet_path}")
-    part_cols = part_cols or []
+    adds = [_add_action(parquet_path, rel) for rel in sorted(rels)]
+    layouts = {tuple(sorted(a["add"]["partitionValues"])) for a in adds}
+    if len(layouts) > 1:
+        raise ValueError(f"inconsistent partition layout: {sorted(layouts)}")
 
     # schema from the files (footer-only) + partition cols typed by Spark's
     # directory inference
     inferred = spark.read.option("basePath", parquet_path).parquet(parquet_path)
-    schema = inferred.schema
+    meta = {
+        "id": str(uuid.uuid4()),
+        "format": {"provider": "parquet", "options": {}},
+        "schemaString": _schema_to_string(inferred.schema),
+        "partitionColumns": list(layouts.pop()),
+        "configuration": {},
+        "createdTime": int(time.time() * 1000),
+    }
+    protocol = {"minReaderVersion": 1, "minWriterVersion": 2}
+    actions = [{"protocol": protocol}, {"metaData": meta}]
+    return _commit(parquet_path, -1, "CONVERT", None, None, actions, adds=adds)
 
-    actions: list[dict] = [
-        {
-            "commitInfo": {
-                "timestamp": int(time.time() * 1000),
-                "operation": "CONVERT",
-                "engineInfo": "delta_unity_duckdb_spark minimal-writer",
-            }
-        },
-        {"protocol": {"minReaderVersion": 1, "minWriterVersion": 2}},
-        {
-            "metaData": {
-                "id": str(uuid.uuid4()),
-                "format": {"provider": "parquet", "options": {}},
-                "schemaString": _schema_to_string(schema),
-                "partitionColumns": part_cols,
-                "configuration": {},
-                "createdTime": int(time.time() * 1000),
-            }
-        },
-    ]
-    for rel, pvals in sorted(data_files):
-        full = os.path.join(parquet_path, rel)
-        add_action = {
-            "path": rel.replace(os.sep, "/"),
-            "partitionValues": pvals,
-            "size": os.path.getsize(full),
-            "modificationTime": int(os.path.getmtime(full) * 1000),
-            "dataChange": True,
-        }
-        stats = _file_stats_json(full)
-        if stats:
-            add_action["stats"] = stats
-        actions.append({"add": add_action})
-    log_dir = os.path.join(parquet_path, "_delta_log")
-    os.makedirs(log_dir, exist_ok=True)
-    payload = "\n".join(json.dumps(a, separators=(",", ":")) for a in actions) + "\n"
-    fd = os.open(_commit_path(log_dir, 0), os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-    with os.fdopen(fd, "w") as fh:
-        fh.write(payload)
-    return 0
 
 def restore_delta(
     spark: SparkSession, table_path: str, version: int
@@ -1547,50 +1460,25 @@ def restore_delta(
             f"vacuumed, e.g. {missing[0]!r}"
         )
 
-    ts = int(time.time() * 1000)
     to_remove = sorted(set(cur.adds) - set(tgt.adds))
     to_add = sorted(set(tgt.adds) - set(cur.adds))
-    actions: list[dict] = [
-        {
-            "commitInfo": {
-                "timestamp": ts,
-                "operation": "RESTORE",
-                "operationParameters": {"version": version},
-                "operationMetrics": {
-                    "numRestoredFiles": len(to_add),
-                    "numRemovedFiles": len(to_remove),
-                },
-                "engineInfo": "delta_unity_duckdb_spark minimal-writer",
-            }
-        },
-        {"metaData": tgt.metadata},
-    ]
-    for path in to_remove:
-        actions.append(
-            {"remove": {"path": path, "deletionTimestamp": ts, "dataChange": True}}
-        )
-    for path in to_add:
-        add = dict(tgt.adds[path])
-        add["dataChange"] = True
-        actions.append({"add": add})
-
-    log_dir = os.path.join(table_path, "_delta_log")
-    payload = "\n".join(json.dumps(a, separators=(",", ":")) for a in actions) + "\n"
-    cpath = _commit_path(log_dir, cur.version + 1)
-    try:
-        fd = os.open(cpath, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-    except FileExistsError:
-        raise DeltaProtocolError(
-            f"concurrent commit at version {cur.version + 1}; re-run the restore"
-        ) from None
-    with os.fdopen(fd, "w") as fh:
-        fh.write(payload)
+    new_version = _commit(
+        table_path,
+        cur.version,
+        "RESTORE",
+        {"version": version},
+        {"numRestoredFiles": len(to_add), "numRemovedFiles": len(to_remove)},
+        [{"metaData": tgt.metadata}],
+        to_remove,
+        [{"add": dict(tgt.adds[p], dataChange=True)} for p in to_add],
+    )
     return {
-        "version": cur.version + 1,
+        "version": new_version,
         "restored_to": version,
         "files_added": len(to_add),
         "files_removed": len(to_remove),
     }
+
 
 def _check_constraints(metadata: dict | None) -> dict[str, str]:
     """CHECK constraints from table configuration (``delta.constraints.<name>``)."""
@@ -1631,30 +1519,14 @@ def add_check_constraint(
     cfg = dict(meta.get("configuration") or {})
     cfg[f"delta.constraints.{name}"] = expr
     meta["configuration"] = cfg
-    actions = [
-        {
-            "commitInfo": {
-                "timestamp": int(time.time() * 1000),
-                "operation": "ADD CONSTRAINT",
-                "operationParameters": {"name": name, "expr": expr},
-                "engineInfo": "delta_unity_duckdb_spark minimal-writer",
-            }
-        },
-        {"protocol": {"minReaderVersion": 1, "minWriterVersion": 3}},
-        {"metaData": meta},
-    ]
-    log_dir = os.path.join(table_path, "_delta_log")
-    payload = "\n".join(json.dumps(a, separators=(",", ":")) for a in actions) + "\n"
-    cpath = _commit_path(log_dir, snap.version + 1)
-    try:
-        fd = os.open(cpath, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-    except FileExistsError:
-        raise DeltaProtocolError(
-            f"concurrent commit at version {snap.version + 1}"
-        ) from None
-    with os.fdopen(fd, "w") as fh:
-        fh.write(payload)
-    return snap.version + 1
+    return _commit(
+        table_path,
+        snap.version,
+        "ADD CONSTRAINT",
+        {"name": name, "expr": expr},
+        None,
+        [{"protocol": {"minReaderVersion": 1, "minWriterVersion": 3}}, {"metaData": meta}],
+    )
 
 
 def drop_check_constraint(
@@ -1668,26 +1540,6 @@ def drop_check_constraint(
     cfg = dict(meta.get("configuration") or {})
     del cfg[f"delta.constraints.{name}"]
     meta["configuration"] = cfg
-    actions = [
-        {
-            "commitInfo": {
-                "timestamp": int(time.time() * 1000),
-                "operation": "DROP CONSTRAINT",
-                "operationParameters": {"name": name},
-                "engineInfo": "delta_unity_duckdb_spark minimal-writer",
-            }
-        },
-        {"metaData": meta},
-    ]
-    log_dir = os.path.join(table_path, "_delta_log")
-    payload = "\n".join(json.dumps(a, separators=(",", ":")) for a in actions) + "\n"
-    cpath = _commit_path(log_dir, snap.version + 1)
-    try:
-        fd = os.open(cpath, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-    except FileExistsError:
-        raise DeltaProtocolError(
-            f"concurrent commit at version {snap.version + 1}"
-        ) from None
-    with os.fdopen(fd, "w") as fh:
-        fh.write(payload)
-    return snap.version + 1
+    return _commit(
+        table_path, snap.version, "DROP CONSTRAINT", {"name": name}, None, [{"metaData": meta}]
+    )
