@@ -22,8 +22,9 @@ def local_rows_df(spark, rows, schema: str):
     """
     if rows and all(v is not None for r in rows for v in r):
         import pandas as pd
+        from pyspark.sql.types import StructType
 
-        names = [f.split()[0].strip("`") for f in schema.split(",")]
+        names = StructType.fromDDL(schema).names
         return spark.createDataFrame(
             pd.DataFrame(rows, columns=names), schema
         )

@@ -396,18 +396,41 @@ def minhash_near_dups(
     The earlier long-form layout (explode to num_perm rows → groupBy(id,
     band) collect_list) paid a full shuffle of num_perm × N rows just to
     reassemble slices that were already adjacent in the wide row.
+
+    Two steps, shared with ``near_dup_clusters``: the eagerly
+    checkpointed band index (``_band_index``), then the distributed
+    pairing (``_pairs_from_bands``). This function always pairs in Spark,
+    since its result is the pair frame itself; ``near_dup_clusters``
+    pairs on the driver instead when the band index and its pair count
+    both fit ``graph.SMALL_GRAPH_EDGES``.
     """
-    # ``banded`` has THREE consumers (bucket-size census + both sides of
-    # the self-join). Materialize it once: without this, each consumer
-    # re-runs the full signature map (md5 over every shingle) — the old
-    # long-form groupBy got this for free via shuffle-exchange reuse, but
-    # paid a num_perm × N shuffle for it. A checkpoint of the compact
-    # (id, band, bucket) rows keeps the zero-shuffle map AND single
-    # execution; at cluster scale this is a cache/checkpoint of
-    # bands × N small rows — linear, spillable.
-    banded = minhash_band_buckets(
-        df, id_col, text_col, num_perm, bands, shingle_n, seed
-    ).localCheckpoint(eager=True, storageLevel=CKPT_DESER)
+    return _pairs_from_bands(
+        _band_index(
+            df, id_col, text_col,
+            num_perm=num_perm, bands=bands, shingle_n=shingle_n, seed=seed,
+        ),
+        max_bucket_size,
+    )
+
+
+def _band_index(df: DataFrame, id_col: str, text_col: str, **band_args) -> DataFrame:
+    """``minhash_band_buckets``, eagerly checkpointed.
+
+    The (id, band, bucket) rows have THREE consumers in the distributed
+    pairing (bucket-size census + both sides of the self-join) and one
+    bounded probe in ``near_dup_clusters``' driver regime. Materialize
+    them once: without this, each consumer re-runs the full signature
+    map (md5 over every shingle). At cluster scale this is a checkpoint
+    of bands × N small rows — linear, spillable."""
+    return minhash_band_buckets(df, id_col, text_col, **band_args).localCheckpoint(
+        eager=True, storageLevel=CKPT_DESER
+    )
+
+
+def _pairs_from_bands(banded: DataFrame, max_bucket_size: int) -> DataFrame:
+    """Distributed LSH pairing over a band index: bucket census, drop
+    buckets above ``max_bucket_size``, self-join on (band, bucket) with
+    ``id_a < id_b``, distinct."""
     bucket_sizes = banded.groupBy("band", "bucket").agg(F.count(F.lit(1)).alias("sz"))
     small = bucket_sizes.filter(F.col("sz") <= max_bucket_size).select("band", "bucket")
     b = banded.join(small, ["band", "bucket"])
@@ -422,6 +445,47 @@ def minhash_near_dups(
         .select(F.col("x.id").alias("id_a"), F.col("y.id").alias("id_b"))
         .distinct()
     )
+
+
+def _driver_pairs(banded: DataFrame, max_bucket_size: int, cap: int):
+    """``_pairs_from_bands`` on the driver, from one bounded Arrow collect
+    of the band index. Returns the distinct (id_a, id_b) int64 arrays, or
+    ``None`` when the band rows or the pairs they would produce exceed
+    ``cap``. The pair count is Σ sz·(sz−1)/2 over the kept buckets, taken
+    from the census before any pair is built, so a corpus of large
+    buckets cannot blow up driver memory. Integral ids only."""
+    import numpy as np
+
+    t = banded.limit(cap + 1).toArrow()
+    if t.num_rows > cap:
+        return None
+    band = t.column("band").to_numpy()
+    bucket = t.column("bucket").to_numpy()
+    null = t.column("id").is_null().to_numpy()
+    ids = t.column("id").fill_null(0).to_numpy().astype(np.int64)
+    order = np.lexsort((ids, bucket, band))
+    band, bucket, ids, null = band[order], bucket[order], ids[order], null[order]
+    # census: rows per (band, bucket); NULL ids count, as in Spark's groupBy
+    first = np.ones(len(ids), dtype=bool)
+    first[1:] = (band[1:] != band[:-1]) | (bucket[1:] != bucket[:-1])
+    sizes = np.diff(np.append(np.flatnonzero(first), len(ids)))
+    kept = sizes <= max_bucket_size
+    if int((sizes[kept] * (sizes[kept] - 1) // 2).sum()) > cap:
+        return None
+    # NULL ids never pair (``x.id < y.id`` is never true for them)
+    rows = np.repeat(kept, sizes) & ~null
+    group = np.repeat(np.arange(len(sizes)), sizes)[rows]
+    ids = ids[rows]
+    # self-match: each row against every later row of its bucket (rows
+    # are id-sorted within a bucket, so the later id is never smaller)
+    pos = np.arange(len(ids))
+    later = np.searchsorted(group, group, side="right") - pos - 1
+    left = np.repeat(pos, later)
+    right = left + 1 + np.arange(len(left)) - np.repeat(np.cumsum(later) - later, later)
+    a, b = ids[left], ids[right]
+    strict = a < b
+    pairs = np.unique(np.stack([a[strict], b[strict]], axis=1), axis=0)
+    return pairs[:, 0], pairs[:, 1]
 
 
 def simhash_fingerprints(
@@ -740,16 +804,47 @@ def near_dup_clusters(
     keep one survivor (min id) per component: transitive closure, exactly
     one representative per duplicate family.
 
-    Returns (id, cluster, is_survivor). Pipeline: MinHash+LSH pairs
-    (banded, no cross join) → connected_components (pointer jumping,
-    O(log diameter) rounds) → left join back so non-duplicate docs stay
-    their own singleton cluster.
-    """
-    from delta_unity_duckdb_spark.operators.graph import connected_components
+    Returns (id, cluster, is_survivor). Pipeline: MinHash+LSH band index
+    (eagerly checkpointed) → candidate pairs → min-id components → left
+    join back from ``df``'s ids, so non-duplicate docs stay their own
+    singleton cluster and a NULL id gets a NULL cluster.
 
-    pairs = minhash_near_dups(df, id_col, text_col, num_perm=num_perm, bands=bands)
-    edges = pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
-    comp = connected_components(edges)  # (node, component) for dup members only
+    Two regimes, chosen by measured size against ``graph.SMALL_GRAPH_EDGES``
+    (read at call time):
+    - driver: the band index is probed with one bounded Arrow collect; if
+      its rows AND its pair count (Σ sz·(sz−1)/2 over the kept buckets,
+      from the census) fit the cap and the ids are integral, the pairs
+      (``_driver_pairs``) and the components (``graph._components_df``)
+      are computed on the driver;
+    - distributed: otherwise the checkpointed band index is paired in
+      Spark (``_pairs_from_bands``, the ``minhash_near_dups`` plan) and
+      clustered by ``graph.connected_components``.
+    Both give the same rows.
+    """
+    from pyspark.sql.types import IntegralType
+
+    from delta_unity_duckdb_spark.operators import graph as G
+
+    max_bucket_size = 1000  # minhash_near_dups' default
+    banded = _band_index(df, id_col, text_col, num_perm=num_perm, bands=bands)
+    cap = G.SMALL_GRAPH_EDGES
+    pairs = None
+    if cap > 0 and isinstance(banded.schema["id"].dataType, IntegralType):
+        pairs = _driver_pairs(banded, max_bucket_size, cap)
+    if pairs is not None:
+        comp = G._components_df(
+            df.sparkSession,
+            pairs[0].tolist(),
+            pairs[1].tolist(),
+            banded.select(
+                F.col("id").alias("node"), F.col("id").alias("component")
+            ).schema,
+        )
+    else:
+        edges = _pairs_from_bands(banded, max_bucket_size).select(
+            F.col("id_a").alias("src"), F.col("id_b").alias("dst")
+        )
+        comp = G.connected_components(edges)
     return (
         df.select(F.col(id_col).alias("id"))
         .join(comp, F.col("id") == comp.node, "left")

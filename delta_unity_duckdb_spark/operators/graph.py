@@ -23,11 +23,13 @@ from pyspark.sql import functions as F
 from delta_unity_duckdb_spark.sources.tables import load_table
 from delta_unity_duckdb_spark.functions.frames import CKPT_DESER
 
-# Fast-path threshold shared by connected_components and kcore: graphs at
-# or below this many edges (and with integral node ids) are solved on the
-# driver — the same class of adaptive decision as AQE's broadcast-join
-# threshold. Tests set this to 0 to force the distributed path and pin
-# value-equivalence of the two implementations.
+# Fast-path threshold shared by connected_components and kcore, and by
+# dedup.near_dup_clusters and graphq.graph_kcore, which call their driver
+# kernels directly; all read it at call time. Graphs at or below this many
+# edges (and with integral node ids) are solved on the driver — the same
+# class of adaptive decision as AQE's broadcast-join threshold. Tests set
+# this to 0 to force the distributed path and pin value-equivalence of the
+# two implementations.
 SMALL_GRAPH_EDGES = 2_000_000
 
 
@@ -433,6 +435,69 @@ def descendants(
     return reduce(lambda a, b: a.unionByName(b), levels)
 
 
+def _components_df(spark: SparkSession, src, dst, schema) -> DataFrame:
+    """Driver kernel of ``connected_components``' small-graph regime, also
+    run by ``dedup.near_dup_clusters``: union-find over the integral pairs
+    ``zip(src, dst)`` (NULLs already dropped), every node labeled with the
+    minimum id of its component, returned as a (node, component) frame
+    of ``schema``."""
+    parent: dict = {}
+
+    def find(x):
+        r = x
+        while parent[r] != r:
+            r = parent[r]
+        while parent[x] != r:  # path compression
+            parent[x], x = r, parent[x]
+        return r
+
+    for u, v in zip(src, dst):
+        if u not in parent:
+            parent[u] = u
+        if v not in parent:
+            parent[v] = v
+        ru, rv = find(u), find(v)
+        if ru != rv:
+            parent[ru] = rv
+    comp_min: dict = {}
+    for n_ in parent:
+        r_ = find(n_)
+        if r_ not in comp_min or n_ < comp_min[r_]:
+            comp_min[r_] = n_
+    items = [(n_, comp_min[find(n_)]) for n_ in parent]
+    if not items:
+        return spark.createDataFrame([], schema=schema)
+    # pandas/Arrow local relation: the Row-list pickle path costs
+    # 0.4+ s per call and scales badly with node count (measured
+    # ~0.5 s of graph_components' exec at sf0.1 was exactly this)
+    import pandas as pd
+
+    return spark.createDataFrame(
+        pd.DataFrame(items, columns=["node", "component"]), schema=schema
+    )
+
+
+def _kcore_prune(src, dst, k: int, rounds: int):
+    """Driver kernel of ``kcore``' small-graph regime, also run by
+    ``graphq.graph_kcore``: up to ``rounds`` simultaneous pruning rounds
+    over the symmetric int64 edge arrays (bincount degrees over dense-
+    mapped ids), stopping early at the fixpoint exactly as the
+    distributed rounds do. Returns the surviving (src, dst) arrays."""
+    import numpy as np
+
+    nodes = np.unique(np.concatenate([src, dst]))
+    s_i = np.searchsorted(nodes, src)
+    d_i = np.searchsorted(nodes, dst)
+    for _ in range(rounds):
+        deg = np.bincount(s_i, minlength=len(nodes))
+        keep = deg >= k
+        mask = keep[s_i] & keep[d_i]
+        if mask.all():
+            break
+        s_i, d_i = s_i[mask], d_i[mask]
+    return nodes[s_i], nodes[d_i]
+
+
 def connected_components(edges: DataFrame, max_iter: int = 32) -> DataFrame:
     """Undirected connected components: every node labeled with the
     minimum node id reachable from it. Returns (node, component).
@@ -482,55 +547,18 @@ def connected_components(edges: DataFrame, max_iter: int = 32) -> DataFrame:
             # equality joins drop them; drop them here too (and avoid a
             # NaN key that would never satisfy parent[r] == r).
             probe_pdf = probe_pdf.dropna()
-            pair_rows = list(
-                zip(
-                    # a nullable column arrives as float64; cast back to
-                    # exact ints once the NaNs are gone
-                    probe_pdf["src"].astype("int64").tolist(),
-                    probe_pdf["dst"].astype("int64").tolist(),
-                )
-            )
-            parent: dict = {}
-
-            def find(x):
-                r = x
-                while parent[r] != r:
-                    r = parent[r]
-                while parent[x] != r:  # path compression
-                    parent[x], x = r, parent[x]
-                return r
-
-            for r_ in pair_rows:
-                u, v = r_[0], r_[1]
-                if u not in parent:
-                    parent[u] = u
-                if v not in parent:
-                    parent[v] = v
-                ru, rv = find(u), find(v)
-                if ru != rv:
-                    parent[ru] = rv
-            comp_min: dict = {}
-            for n_ in parent:
-                r_ = find(n_)
-                if r_ not in comp_min or n_ < comp_min[r_]:
-                    comp_min[r_] = n_
-            spark = edges.sparkSession
             out_schema = (
                 edges.select(
                     F.col("src").alias("node"), F.col("src").alias("component")
                 ).schema
             )
-            items = [(n_, comp_min[find(n_)]) for n_ in parent]
-            if not items:
-                return spark.createDataFrame([], schema=out_schema)
-            # pandas/Arrow local relation: the Row-list pickle path costs
-            # 0.4+ s per call and scales badly with node count (measured
-            # ~0.5 s of graph_components' exec at sf0.1 was exactly this)
-            import pandas as pd
-
-            return spark.createDataFrame(
-                pd.DataFrame(items, columns=["node", "component"]),
-                schema=out_schema,
+            return _components_df(
+                edges.sparkSession,
+                # a nullable column arrives as float64; cast back to exact
+                # ints once the NaNs are gone
+                probe_pdf["src"].astype("int64").tolist(),
+                probe_pdf["dst"].astype("int64").tolist(),
+                out_schema,
             )
     sym = sym.persist()
     labels = (
@@ -539,9 +567,15 @@ def connected_components(edges: DataFrame, max_iter: int = 32) -> DataFrame:
         .withColumn("component", F.col("node"))
         .localCheckpoint(eager=True, storageLevel=CKPT_DESER)
     )
-    prev_sum = labels.agg(
-        F.sum(F.col("component").cast("decimal(38,0)"))
-    ).collect()[0][0]
+    integral = isinstance(edges.schema["src"].dataType, IntegralType)
+
+    def label_sum(df):
+        # decimal(38,0) so the probe cannot overflow at 1e10+ nodes
+        return df.agg(
+            F.sum(F.col("component").cast("decimal(38,0)"))
+        ).collect()[0][0]
+
+    prev_sum = label_sum(labels) if integral else None
     for _ in range(max_iter):
         nbr_min = (
             sym.join(labels, sym.dst == labels.node)
@@ -571,15 +605,20 @@ def connected_components(edges: DataFrame, max_iter: int = 32) -> DataFrame:
         # the label sum is strictly monotone until the fixpoint: an
         # unchanged sum ⇔ no label moved ⇔ converged. One cheap aggregate
         # over the freshly checkpointed frame, instead of a join-based
-        # diff against the previous round.
-        # decimal(38,0) so the probe cannot overflow at 1e10+ nodes
-        new_sum = jump.agg(
-            F.sum(F.col("component").cast("decimal(38,0)"))
-        ).collect()[0][0]
+        # diff against the previous round. Labels with no exact sum
+        # (strings) take the diff.
+        if integral:
+            new_sum = label_sum(jump)
+            settled, prev_sum = new_sum == prev_sum, new_sum
+        else:
+            settled = (
+                jump.join(labels.withColumnRenamed("component", "prev"), "node")
+                .filter(F.col("component") != F.col("prev"))
+                .isEmpty()
+            )
         labels = jump
-        if new_sum == prev_sum:
+        if settled:
             break
-        prev_sum = new_sum
     sym.unpersist()
     return labels
 
@@ -894,24 +933,16 @@ def kcore(edges: DataFrame, k: int, rounds: int) -> DataFrame:
             import numpy as np
             import pandas as pd
 
-            s_raw = probe["src"].to_numpy(np.int64)
-            d_raw = probe["dst"].to_numpy(np.int64)
-            nodes = np.unique(np.concatenate([s_raw, d_raw]))
-            s_i = np.searchsorted(nodes, s_raw)
-            d_i = np.searchsorted(nodes, d_raw)
-            for _ in range(rounds):
-                deg = np.bincount(s_i, minlength=len(nodes))
-                keep = deg >= k
-                mask = keep[s_i] & keep[d_i]
-                if mask.all():
-                    break
-                s_i, d_i = s_i[mask], d_i[mask]
-            if len(s_i) == 0:  # everything pruned — typed empty frame
+            src, dst = _kcore_prune(
+                probe["src"].to_numpy(np.int64),
+                probe["dst"].to_numpy(np.int64),
+                k,
+                rounds,
+            )
+            if len(src) == 0:  # everything pruned — typed empty frame
                 return edges.select("src", "dst").limit(0)
             spark = edges.sparkSession
-            out = spark.createDataFrame(
-                pd.DataFrame({"src": nodes[s_i], "dst": nodes[d_i]})
-            )
+            out = spark.createDataFrame(pd.DataFrame({"src": src, "dst": dst}))
             src_t = edges.schema["src"].dataType.simpleString()
             dst_t = edges.schema["dst"].dataType.simpleString()
             return out.select(

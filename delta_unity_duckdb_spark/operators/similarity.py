@@ -168,7 +168,11 @@ def ivf_topk(
     query vectors) fall back to the expression form."""
     import numpy as np
 
-    crows = _ivf_centroids(embeddings, nlist, id_col, vec_col).collect()
+    # cid order is the kernel's column order; collect() promises none
+    crows = sorted(
+        _ivf_centroids(embeddings, nlist, id_col, vec_col).collect(),
+        key=lambda r: r["cid"],
+    )
     qrows = query.limit(2).collect()
 
     def _clean(v, dim=None):

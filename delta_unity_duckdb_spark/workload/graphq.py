@@ -451,13 +451,25 @@ def graph_kcore(spark, sf_dir):
     fixture SF — same result as 16), DuckDB oracle replaying
     the identical unrolled rounds. The core/periphery split is the
     classic graph-cleaning pass (drop weakly-connected noise vertices
-    before community/embedding work). Each round shuffles only surviving
-    edges; the sampling hash is the portable md5 hash on the UNORDERED
-    pair so both edge directions live or die together."""
-    from pyspark.sql import functions as F
+    before community/embedding work). The sampling hash is the portable
+    md5 hash on the UNORDERED pair so both edge directions live or die
+    together.
 
+    Two regimes, chosen by measured size against
+    ``graph.SMALL_GRAPH_EDGES`` (read at call time): the checkpointed
+    half-edge list is probed with one bounded Arrow collect; if it fits
+    and its ids are integral, the pruning rounds (``graph._kcore_prune``)
+    and the four degree statistics run on the driver and the one row
+    returns through ``local_rows_df``. Otherwise ``graph.kcore`` prunes
+    in Spark (each round shuffles only surviving edges) and the
+    statistics are one degree aggregate. Both give the same row."""
+    import numpy as np
+    from pyspark.sql import functions as F
+    from pyspark.sql.types import IntegralType
+
+    from delta_unity_duckdb_spark.functions.frames import local_rows_df
     from delta_unity_duckdb_spark.functions.hashing import hash60
-    from delta_unity_duckdb_spark.operators.graph import kcore
+    from delta_unity_duckdb_spark.operators import graph as G
     from delta_unity_duckdb_spark.sources.tables import load_table
 
     # Round-9 edge build (was: distinct (o,p) + self-join on o + post-
@@ -500,10 +512,35 @@ def graph_kcore(spark, sf_dir):
     # point of hashing each unordered pair once), rather than relying on
     # exchange reuse to fire for each branch.
     half = half.localCheckpoint(eager=True, storageLevel=CKPT_DESER)
+    k, rounds = 6, 12
+    cap = G.SMALL_GRAPH_EDGES
+    if cap > 0 and all(isinstance(f.dataType, IntegralType) for f in half.schema):
+        t = half.limit(cap + 1).toArrow()
+        if t.num_rows <= cap:
+            # NULL endpoints never survive the distributed rounds' joins
+            t = t.drop_null()
+            s_raw = t.column("src").to_numpy().astype(np.int64)
+            d_raw = t.column("dst").to_numpy().astype(np.int64)
+            src, _ = G._kcore_prune(
+                np.concatenate([s_raw, d_raw]),
+                np.concatenate([d_raw, s_raw]),
+                k,
+                rounds,
+            )
+            deg = np.unique(src, return_counts=True)[1]
+            row = (len(deg), len(src) // 2) + (
+                (int(deg.min()), int(deg.max())) if len(deg) else (0, 0)
+            )
+            return local_rows_df(
+                spark,
+                [row],
+                "n_core_vertices bigint, n_core_edges bigint,"
+                " min_degree bigint, max_degree bigint",
+            )
     edges = half.unionByName(
         half.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     )
-    core = kcore(edges, k=6, rounds=12)
+    core = G.kcore(edges, k=k, rounds=rounds)
     # All four outputs derive from the degree frame alone: over symmetric
     # edges Σd = 2|E|, so n_core_edges = Σd div 2 — one aggregation
     # branch, no second pass over core, no cross join (the old two-branch

@@ -128,6 +128,31 @@ def test_ivf_kernel_matches_expression_path(spark, sf_dir):
     assert any(s is None for _, s in got_all)  # degenerates actually emitted
 
 
+def test_ivf_kernel_does_not_assume_centroid_row_order(spark, sf_dir, monkeypatch):
+    """The kernel maps centroid rows to cids by sorting on ``cid``, not by
+    trusting the order ``collect()`` happens to return. With the rows
+    reversed, a label-by-position kernel still probes the same partitions
+    for clean vectors, but it puts a NULL vector (assigned to cid 1) into
+    the partition of cid 16: at nprobe 8 on this fixture one of the two is
+    probed and the other is not, so the NULL-score row comes and goes."""
+    from pyspark.sql import Row
+
+    e = load_table(spark, sf_dir, "embeddings")
+    q = e.filter(F.col("vec_id") == 0).select(F.col("embedding").alias("qvec"))
+    base = e.filter(F.col("vec_id") != 0).select("vec_id", "embedding")
+    corpus = base.unionByName(
+        spark.createDataFrame([Row(vec_id=900001, embedding=None)], base.schema)
+    )
+    k = corpus.count()
+    ref = S._ivf_topk_expr(corpus, q, k, 16, 8, "vec_id", "embedding").collect()
+    centroids = S._ivf_centroids
+    monkeypatch.setattr(
+        S, "_ivf_centroids", lambda *a: centroids(*a).orderBy(F.desc("cid"))
+    )
+    assert S._ivf_centroids(corpus, 16, "vec_id", "embedding").first()["cid"] == 16
+    assert S.ivf_topk(corpus, q, k=k, nlist=16, nprobe=8).collect() == ref
+
+
 def test_near_dup_clusters_transitive_single_survivor(spark):
     from delta_unity_duckdb_spark.operators.dedup import near_dup_clusters
 
