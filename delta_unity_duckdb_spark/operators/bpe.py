@@ -223,7 +223,7 @@ def bpe_encode_stats(
             " tokens_per_char_ppm bigint"
         )
         if not words:
-            return spark.createDataFrame([(None, None, None, None)], stats_schema)
+            return local_rows_df(spark, [(None, None, None, None)], stats_schema)
         n_words = sum(cnts)
         n_chars = sum(c * len(w) for w, c in zip(words, cnts))
         n_tokens = sum(c * len(s) for s, c in zip(syms, cnts))

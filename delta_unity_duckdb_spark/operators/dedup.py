@@ -19,7 +19,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-from delta_unity_duckdb_spark.functions.frames import CKPT_DESER
+from delta_unity_duckdb_spark.functions.frames import CKPT_DESER, local_rows_df
 
 # Large primes for the universal-hash family h_i(x) = (a_i*x + b_i) mod p.
 _MERSENNE_P = (1 << 61) - 1
@@ -702,7 +702,7 @@ def _cosine_candidates_driver(
     # NULL ids never pair (id_a < id_b is NULL) and are never dropped
     probe = probe[probe["v"].notna() & probe["id"].notna()]
     if len(probe) < 2:
-        return spark.createDataFrame([], cand_schema)
+        return local_rows_df(spark, [], cand_schema)
     try:
         # None elements inside a vector become NaN (dtype=float), which
         # propagates to NaN similarity — never a candidate, matching the

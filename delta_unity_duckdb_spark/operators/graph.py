@@ -21,7 +21,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from delta_unity_duckdb_spark.sources.tables import load_table
-from delta_unity_duckdb_spark.functions.frames import CKPT_DESER
+from delta_unity_duckdb_spark.functions.frames import CKPT_DESER, local_rows_df
 
 # Fast-path threshold shared by connected_components and kcore, and by
 # dedup.near_dup_clusters and graphq.graph_kcore, which call their driver
@@ -466,7 +466,7 @@ def _components_df(spark: SparkSession, src, dst, schema) -> DataFrame:
             comp_min[r_] = n_
     items = [(n_, comp_min[find(n_)]) for n_ in parent]
     if not items:
-        return spark.createDataFrame([], schema=schema)
+        return local_rows_df(spark, [], schema)
     # pandas/Arrow local relation: the Row-list pickle path costs
     # 0.4+ s per call and scales badly with node count (measured
     # ~0.5 s of graph_components' exec at sf0.1 was exactly this)
@@ -766,7 +766,7 @@ def pagerank_int(
                 ]
             )
             if len(probe) == 0:
-                return spark.createDataFrame([], schema)
+                return local_rows_df(spark, [], schema)
             s_raw = probe["src"].to_numpy(np.int64)
             d_raw = probe["dst"].to_numpy(np.int64)
             nodes = np.unique(np.concatenate([s_raw, d_raw]))

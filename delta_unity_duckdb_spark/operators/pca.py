@@ -38,6 +38,8 @@ from collections.abc import Iterator
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from delta_unity_duckdb_spark.functions.frames import local_rows_df
+
 FP_SCALE = 1_000_000  # vector fixed point: 1e-6
 C_SCALE = 1_000_000_000  # covariance fixed point: 1e-9
 
@@ -170,8 +172,6 @@ def pca_top_component(
 
     dims, loadings, lam = _power_iterate(g, s, n, d, iters)
     rows = [(int(dims[t]), loadings[t], lam) for t in range(d)]
-    from delta_unity_duckdb_spark.functions.frames import local_rows_df
-
     return local_rows_df(
         spark, rows, "dim bigint, loading double, eigenvalue double"
     ).orderBy("dim")
@@ -298,7 +298,7 @@ def pca_projection_scores(
     cells = {(r.i, r.j): int(r.val) for r in parts}
     n = cells.pop((-1, -1), 0)
     if n == 0:
-        return spark.createDataFrame([], f"{id_col} bigint, score double")
+        return local_rows_df(spark, [], f"{id_col} bigint, score double")
     d = 1 + max(i for i, j in cells if j == -1)
     s = [cells.pop((i, -1)) for i in range(d)]
     g = [[0] * d for _ in range(d)]

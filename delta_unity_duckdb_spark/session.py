@@ -17,6 +17,14 @@ import os
 
 from pyspark.sql import SparkSession
 
+# Codegen cache size (``spark.sql.codegen.cache.maxEntries``; Spark's default
+# is 100). Classes compiled per warm pass under the default, measured with
+# CodegenMetrics' compile count (4 cores, sf0.01): perfbench curation 129,
+# lakehouse 135, the 60-query bench.py headline 1201-1209 (987 distinct).
+# With 4096 a warm curation or headline pass compiles 0 classes, and
+# lakehouse only those of its fresh scan literals (28).
+CODEGEN_CACHE_ENTRIES = 4096
+
 
 def _default_driver_mem() -> str:
     """Half the machine's physical RAM, capped at 24g — big enough for
@@ -135,6 +143,18 @@ def get_spark(
         # the most common pruning dimension at lakehouse scale.
         .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
+        # Keep generated classes across calls. Spark's 100-entry codegen
+        # cache is smaller than one pass's working set (see
+        # CODEGEN_CACHE_ENTRIES), so every warm call recompiled every class
+        # and re-warmed the JIT. Guava splits the cache into ~4 LRU
+        # segments, so the size needs headroom over the working set or it
+        # still evicts.
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
+        # No per-call call-site capture: with DataFrame debugging on, every
+        # F.*/Column/DataFrame call first makes ~5 py4j round-trips to set
+        # and clear its origin (2-3x the round-trips of a whole frame
+        # construction). It only decorates error messages.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         # local-mode driver IS the executor: size the heap for iterative
         # graph/dedup checkpoints at the larger synthetic SFs (an 8g heap
         # OOMed k-core's edge checkpoint at sf10), but never past half the

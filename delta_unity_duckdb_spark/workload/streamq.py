@@ -760,10 +760,11 @@ def stream_media_decode(spark, sf_dir):
         )
         # materialize BEFORE the feed dir is removed — the memory sink
         # already holds the rows, but the returned plan must not point
-        # at deleted input files (pandas round-trip: Arrow local relation
-        # instead of the Row-list pickle path)
+        # at deleted input files (Arrow round-trip: an Arrow local
+        # relation that keeps NULL-carrying longs exact; pandas would
+        # widen them to float64)
         return spark.createDataFrame(
-            out.orderBy("asset_id").toPandas(), out.schema
+            out.orderBy("asset_id").toArrow(), out.schema
         )
     finally:
         shutil.rmtree(feed_dir, ignore_errors=True)

@@ -169,6 +169,42 @@ class TestStreamMediaDecode:
         )
         assert stream == batch
 
+    def test_null_long_survives_materialization(self, spark, monkeypatch):
+        # the memory-sink rows are materialized into a local relation; a
+        # NULL in a long column must come back as a NULL bigint, with the
+        # other rows' values exact. A pandas round-trip widens the column
+        # to float64, which holds no odd long above 2**53.
+        from pyspark.sql import functions as F
+
+        from delta_unity_duckdb_spark.operators import multimodal
+        from delta_unity_duckdb_spark.workload import QUERIES
+
+        real = multimodal.audio_features
+        batch = {
+            r["asset_id"]: tuple(r)
+            for r in real(multimodal.make_wav_media(spark, 24)).collect()
+        }
+        victim = min(batch)
+        big = 2**53 + 1
+        monkeypatch.setattr(
+            multimodal,
+            "audio_features",
+            lambda media: real(media).withColumn(
+                "peak", F.when(F.col("asset_id") != victim, F.col("peak") + big)
+            ),
+        )
+        out = QUERIES["stream_media_decode"](spark, "unused")
+        assert dict(out.dtypes)["peak"] == "bigint"
+        got = {r["asset_id"]: r for r in out.collect()}
+        assert got.keys() == batch.keys()
+        assert got[victim]["peak"] is None
+        peak = out.columns.index("peak")
+        for aid, want in batch.items():
+            row = tuple(got[aid])
+            assert row[:peak] + row[peak + 1 :] == want[:peak] + want[peak + 1 :]
+            if aid != victim:
+                assert type(row[peak]) is int and row[peak] == want[peak] + big
+
 
 class TestMalformedBeyondValueError:
     """Regression: malformed payloads that raise struct.error/zlib.error

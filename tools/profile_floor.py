@@ -1,7 +1,8 @@
 #!/usr/bin/env python
 """Job-floor decomposition for registered queries (guide §1).
 
-For each query, measures per iteration:
+Runs the named queries in passes (the first one a warm-up) and measures,
+for each query and pass:
   - construct  : seconds to build the DataFrame (py4j Column/plan
                  construction PLUS any probe/collect jobs a driver-regime
                  query runs while deciding its regime)
@@ -9,8 +10,12 @@ For each query, measures per iteration:
   - jobs       : number of Spark jobs launched across construct+exec
                  (scheduling floors: each job is ~10-40 ms of fixed cost
                  at local[32] even on empty work)
+  - codegen_compiles : classes Spark's code generator compiled for the
+                 query over the passes after the warm-up; 0 when every
+                 generated class is served from the session's codegen
+                 cache, so a change that brings recompiles back shows here
 
-min-of-N on construct/exec; jobs from the last iteration (deterministic).
+min-of-N on construct/exec; jobs from the last pass (deterministic).
 
 Usage: python tools/profile_floor.py [--sf-dir DIR] [--iters N] name ...
 """
@@ -45,12 +50,17 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
     QUERIES["count_star"](spark, args.sf_dir).collect()
     tracker = spark.sparkContext.statusTracker()
+    codegen = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    compile_timer = codegen.METRIC_COMPILATION_TIME()
 
-    out: dict[str, dict] = {}
-    for n in names:
-        best_c = best_e = float("inf")
-        jobs = 0
-        for _ in range(args.iters + 1):  # first = warmup/codegen
+    inf = float("inf")
+    out = {n: {"construct": inf, "exec": inf, "jobs": 0, "codegen_compiles": 0} for n in names}
+    # Passes over the whole list, not N runs of one query: a codegen cache
+    # smaller than the list's working set evicts between a query's calls,
+    # and only shows up as recompiles when other queries run in between.
+    for it in range(args.iters + 1):  # first pass = warmup/codegen
+        for n in names:
+            c0 = compile_timer.getCount()
             group = f"floor:{n}:{time.monotonic_ns()}"
             spark.sparkContext.setJobGroup(group, n)
             t0 = time.perf_counter()
@@ -58,15 +68,14 @@ def main() -> None:
             t1 = time.perf_counter()
             df.write.format("noop").mode("overwrite").save()
             t2 = time.perf_counter()
-            best_c = min(best_c, t1 - t0)
-            best_e = min(best_e, t2 - t1)
-            jobs = len(tracker.getJobIdsForGroup(group))
+            r = out[n]
+            r["construct"] = min(r["construct"], round(t1 - t0, 3))
+            r["exec"] = min(r["exec"], round(t2 - t1, 3))
+            r["jobs"] = len(tracker.getJobIdsForGroup(group))
+            if it:
+                r["codegen_compiles"] += compile_timer.getCount() - c0
             spark.sparkContext.setJobGroup(None, None)
-        out[n] = {
-            "construct": round(best_c, 3),
-            "exec": round(best_e, 3),
-            "jobs": jobs,
-        }
+    for n in names:
         print(f"[floor] {n}: {out[n]}", file=sys.stderr, flush=True)
     print(json.dumps(out))
 

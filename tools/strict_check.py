@@ -24,7 +24,7 @@ import sys
 def main():
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
     filts = sys.argv[2:]
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
     from pyspark.sql import SparkSession
 
     from delta_unity_duckdb_spark.workload import ORACLE, QUERIES
