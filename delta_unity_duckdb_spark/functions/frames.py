@@ -38,6 +38,42 @@ def local_rows_df(spark, rows, schema):
     return spark.createDataFrame(table, struct)
 
 
+def collect_if_small(df, cap: int):
+    """The driver-or-distributed regime probe: ``df`` as a pyarrow Table
+    when it holds at most ``cap`` rows, else ``None``.
+
+    Every operator with a driver kernel decides its regime here, and the
+    probe IS the kernel's input: one ``df.limit(cap + 1).toArrow()`` job,
+    whose columns keep their exact types (a nullable bigint stays int64
+    beside its NULLs, lists stay lists), so no kernel detours through
+    pandas' float64. ``cap <= 0`` returns ``None`` without a job; tests
+    set a cap to 0 to force the distributed regime."""
+    if cap <= 0:
+        return None
+    t = df.limit(cap + 1).toArrow()
+    return t if t.num_rows <= cap else None
+
+
+def list_matrix(col, dtype):
+    """A non-empty Arrow list column of equal-length lists as an (n, dim) numpy
+    array of ``dtype``, or ``None`` when a list is NULL, the lengths
+    differ, or an integral ``dtype`` meets a NULL element (a float
+    ``dtype`` takes NULL elements as NaN)."""
+    import numpy as np
+    import pyarrow.compute as pc
+
+    col = col.combine_chunks()
+    if col.null_count:
+        return None
+    dims = pc.min_max(pc.list_value_length(col)).as_py()
+    flat = col.flatten()
+    if dims["min"] != dims["max"] or (
+        flat.null_count and not np.issubdtype(dtype, np.floating)
+    ):
+        return None
+    return flat.to_numpy(zero_copy_only=False).astype(dtype).reshape(len(col), dims["max"])
+
+
 def _check_arrow_type(name: str, dt) -> None:
     from pyspark.sql.types import ArrayType, MapType, StructType, TimestampType
 

@@ -31,7 +31,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
-from delta_unity_duckdb_spark.functions.frames import CKPT_DESER
+from delta_unity_duckdb_spark.functions.frames import CKPT_DESER, collect_if_small, list_matrix
 
 SCALE = 100_000  # 1e-5 grid: |q| ≤ ~1e5·|x|; dist sums stay « int64 max
 
@@ -187,19 +187,22 @@ def kmeans_fixed_point_literal(
     # Whole-problem fast path (same adaptive contract as the graph
     # operators' SMALL_GRAPH_EDGES): when the quantized corpus itself is
     # tiny relative to the cluster, each Spark round's scheduling floor
-    # dwarfs the arithmetic — collect once via Arrow and run the
-    # IDENTICAL iterations in numpy. Exactness is preserved end to end:
+    # dwarfs the arithmetic — the bounded probe is the corpus, and the
+    # IDENTICAL iterations run in numpy. Exactness is preserved end to end:
     # int64 arithmetic, np.floor_divide == the portable
     # (s - pmod(s, n)) DIV n floor mean, argmin first-minimum ==
     # lowest-cid tie-break, empty clusters dropped exactly as the
     # aggregate form drops their groups. Equivalence pinned in tests.
-    probe = e.limit(SMALL_KMEANS_ROWS + 1).toPandas()
-    if len(probe) <= SMALL_KMEANS_ROWS and len(probe) > 0:
-        import numpy as np
-        import pandas as pd
+    # Empty, NULL-carrying or ragged input stays in the Spark loop.
+    import numpy as np
+    import pyarrow as pa
 
-        vids = probe["vid"].to_numpy(np.int64)
-        Q = np.stack([np.asarray(q, dtype=np.int64) for q in probe["q"]])
+    small = collect_if_small(e, SMALL_KMEANS_ROWS)
+    Q = None
+    if small is not None and small.num_rows and small.column("vid").null_count == 0:
+        Q = list_matrix(small.column("q"), np.int64)
+    if Q is not None:
+        vids = small.column("vid").to_numpy().astype(np.int64)
         order = np.argsort(vids, kind="stable")
         vids, Q = vids[order], Q[order]
         seed_rows = np.nonzero(vids < k)[0]
@@ -213,7 +216,7 @@ def kmeans_fixed_point_literal(
                 .withColumn("dist", F.lit(None).cast("long"))
             )
         C = Q[seed_rows]  # sorted by vid ⇒ cid 1..len ascending
-        cids = np.arange(1, len(seed_rows) + 1, dtype=np.int64)
+        cids = np.arange(1, len(seed_rows) + 1, dtype=np.int32)
         for _ in range(iters + 1):
             d2 = ((Q[:, None, :] - C[None, :, :]) ** 2).sum(axis=2)
             best = d2.argmin(axis=1)
@@ -227,20 +230,16 @@ def kmeans_fixed_point_literal(
                     new_c.append(
                         np.floor_divide(members.sum(axis=0), len(members))
                     )
-            cids = np.array(keep, dtype=np.int64)
+            cids = np.array(keep, dtype=np.int32)
             C = np.stack(new_c)
-        spark = emb.sparkSession
-        out = spark.createDataFrame(
-            pd.DataFrame(
+        return emb.sparkSession.createDataFrame(
+            pa.table(
                 {
                     "vid": vids,
                     "cid": cids[best],
                     "dist": d2[np.arange(len(best)), best],
                 }
             )
-        )
-        return out.select(
-            "vid", F.col("cid").cast("int").alias("cid"), "dist"
         )
 
     e = e.localCheckpoint(eager=True, storageLevel=CKPT_DESER)

@@ -19,7 +19,12 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-from delta_unity_duckdb_spark.functions.frames import CKPT_DESER, local_rows_df
+from delta_unity_duckdb_spark.functions.frames import (
+    CKPT_DESER,
+    collect_if_small,
+    list_matrix,
+    local_rows_df,
+)
 
 # Large primes for the universal-hash family h_i(x) = (a_i*x + b_i) mod p.
 _MERSENNE_P = (1 << 61) - 1
@@ -456,8 +461,8 @@ def _driver_pairs(banded: DataFrame, max_bucket_size: int, cap: int):
     buckets cannot blow up driver memory. Integral ids only."""
     import numpy as np
 
-    t = banded.limit(cap + 1).toArrow()
-    if t.num_rows > cap:
+    t = collect_if_small(banded, cap)
+    if t is None:
         return None
     band = t.column("band").to_numpy()
     bucket = t.column("bucket").to_numpy()
@@ -671,7 +676,7 @@ def _cosine_candidates_driver(
     (guide §8 shape: decide with a lightweight proxy, then verify with
     the exact engine expression so the VALUES are still produced by the
     same code path the oracle mirrors). Returns None when the input
-    exceeds the driver regime or is ragged/NULL-poisoned — the caller
+    exceeds the driver regime or its vectors are ragged — the caller
     falls back to the distributed quadratic join unchanged.
 
     Why: the JVM expression form evaluates the 64-term fold per pair —
@@ -682,12 +687,11 @@ def _cosine_candidates_driver(
     """
     import numpy as np
 
-    probe = (
-        df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"))
-        .limit(EMB_DRIVER_MAX_VECTORS + 1)
-        .toPandas()
+    t = collect_if_small(
+        df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v")),
+        EMB_DRIVER_MAX_VECTORS,
     )
-    if len(probe) > EMB_DRIVER_MAX_VECTORS:
+    if t is None:
         return None
     spark = df.sparkSession
     id_type = df.schema[id_col].dataType
@@ -699,21 +703,18 @@ def _cosine_candidates_driver(
             T.StructField("id_b", id_type, True),
         ]
     )
-    # NULL ids never pair (id_a < id_b is NULL) and are never dropped
-    probe = probe[probe["v"].notna() & probe["id"].notna()]
-    if len(probe) < 2:
+    # NULL ids never pair (id_a < id_b is NULL) and are never dropped;
+    # NULL vectors never score
+    t = t.drop_null()
+    if t.num_rows < 2:
         return local_rows_df(spark, [], cand_schema)
-    try:
-        # None elements inside a vector become NaN (dtype=float), which
-        # propagates to NaN similarity — never a candidate, matching the
-        # expression's NULL-element → NULL → filtered semantics. Ragged
-        # dims raise here → distributed fallback.
-        x = np.array([np.asarray(v, dtype=np.float64) for v in probe["v"]])
-        if x.ndim != 2:
-            return None
-    except (ValueError, TypeError):
+    # NULL elements inside a vector become NaN, which propagates to NaN
+    # similarity — never a candidate, matching the expression's
+    # NULL-element → NULL → filtered semantics. Ragged dims → distributed.
+    x = list_matrix(t.column("v"), np.float64)
+    if x is None:
         return None
-    ids = probe["id"].to_numpy()
+    ids = t.column("id").to_numpy()
     with np.errstate(divide="ignore", invalid="ignore"):
         norms = np.sqrt((x * x).sum(axis=1))
         cut = threshold - _EMB_CAND_MARGIN
@@ -734,20 +735,22 @@ def _cosine_candidates_driver(
                 pairs_b.append(gj[keep])
     ga = np.concatenate(pairs_a) if pairs_a else np.array([], dtype=int)
     gb = np.concatenate(pairs_b) if pairs_b else np.array([], dtype=int)
-    import pandas as pd
-
     # Orient each pair by id, not by row position: the caller drops id_b,
     # so on input not stored in id order a positional pair would drop the
     # smaller id. Equal ids never pair (the expression's id_a < id_b).
     ia, ib = ids[ga], ids[gb]
     a_first, keep = ia < ib, ia != ib
-    out = pd.DataFrame(
-        {
-            "id_a": np.where(a_first, ia, ib)[keep],
-            "id_b": np.where(a_first, ib, ia)[keep],
-        }
+    import pyarrow as pa
+
+    return spark.createDataFrame(
+        pa.table(
+            {
+                "id_a": np.where(a_first, ia, ib)[keep],
+                "id_b": np.where(a_first, ib, ia)[keep],
+            }
+        ),
+        cand_schema,
     )
-    return spark.createDataFrame(out, cand_schema)
 
 
 def dedup_embedding_cosine(

@@ -21,15 +21,20 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from delta_unity_duckdb_spark.sources.tables import load_table
-from delta_unity_duckdb_spark.functions.frames import CKPT_DESER, local_rows_df
+from delta_unity_duckdb_spark.functions.frames import (
+    CKPT_DESER,
+    collect_if_small,
+    local_rows_df,
+)
 
-# Fast-path threshold shared by connected_components and kcore, and by
-# dedup.near_dup_clusters and graphq.graph_kcore, which call their driver
-# kernels directly; all read it at call time. Graphs at or below this many
-# edges (and with integral node ids) are solved on the driver — the same
-# class of adaptive decision as AQE's broadcast-join threshold. Tests set
-# this to 0 to force the distributed path and pin value-equivalence of the
-# two implementations.
+# Driver-regime cap read at call time by connected_components,
+# pagerank_int, kcore and descendants, and by dedup.near_dup_clusters and
+# graphq.graph_kcore, which run the driver kernels themselves. Each probes
+# its edges once with functions.frames.collect_if_small: graphs at or below
+# this many edges (with integral ids, except in descendants) are solved on
+# the driver, the same class of adaptive decision as AQE's broadcast-join
+# threshold. Tests set it to 0 to force the distributed regime and pin that
+# both regimes give the same rows.
 SMALL_GRAPH_EDGES = 2_000_000
 
 
@@ -330,13 +335,7 @@ def one_hop(
     return joined.limit(limit) if limit is not None else joined
 
 
-def descendants(
-    edges: DataFrame,
-    roots: DataFrame,
-    max_depth: int = 10,
-    probe_every: int = 4,
-    small_graph_edges: int | None = None,
-) -> DataFrame:
+def descendants(edges: DataFrame, roots: DataFrame, max_depth: int = 10) -> DataFrame:
     """Multi-hop reachability via iterative join (SURVEY.md §7.5): Spark has
     no recursive CTE, so BFS iterates ``frontier ⋈ edges`` until empty or
     ``max_depth``. Returns (root, node, depth). ``roots`` must have column
@@ -351,65 +350,76 @@ def descendants(
     plus an ``isEmpty`` probe — so a 40-hop walk is ~80 *sequential*
     scheduling-floor jobs, 6.7 s of pure floor at sf0.1 where the oracle
     (DuckDB WITH RECURSIVE) runs in 0.5 s. The loop is depth-proportional
-    regardless of data size, so the constant is cut in two regimes keyed
-    on the edge count (the same adaptive posture as the other
-    ``SMALL_GRAPH_EDGES`` fast paths, and the same class of decision as
-    AQE's broadcast threshold):
+    regardless of data size, so the constant is cut in two regimes, picked
+    by one ``collect_if_small`` probe of the edge list against
+    ``SMALL_GRAPH_EDGES`` (the same class of decision as AQE's broadcast
+    threshold):
 
-    - **floor regime** (edges ≤ ``small_graph_edges``): collect the edge
-      list and roots and run the BFS in driver-side dict hops — one
-      ``collect`` each plus one ``createDataFrame`` back, ~3 jobs total
-      regardless of depth. Multiplicity semantics are preserved exactly
-      (every path emits, as UNION ALL recursion does). A lazy-batched
-      distributed variant (k levels per checkpoint, probed once per
-      block) was built and measured first and LOST — 7.9 s vs the naive
-      loop's 6.7 s at sf0.1 — because the block union re-derives level i
-      as i serial joins inside one task; the driver hop walk runs the
-      same fixture in well under a second. Output size equals the
+    - **floor regime** (edges ≤ ``SMALL_GRAPH_EDGES``): the probe is the
+      edge list; the roots are one more collect, the BFS runs as
+      vectorized hops over the src-sorted edges on the driver, and one
+      Arrow ``createDataFrame`` returns it — 2 jobs regardless of depth. Multiplicity semantics are
+      preserved exactly (every path emits, as UNION ALL recursion does);
+      a NULL node is emitted and never expands, as in the joins. A
+      lazy-batched distributed variant (k levels per checkpoint, probed
+      once per block) was built and measured first and LOST — 7.9 s vs
+      the naive loop's 6.7 s at sf0.1 — because the block union re-derives
+      level i as i serial joins inside one task; the driver hop walk runs
+      the same fixture in well under a second. Output size equals the
       answer's size, which the distributed path would also materialize.
-    - **scale regime** (bigger graphs): per-level checkpoint — the eager
-      checkpoint IS the materializing job, one action per level — with
-      the emptiness probe run only every ``probe_every`` levels against
-      already-materialized partitions. Join work stays linear in depth;
-      an overshoot past the true fixpoint costs at most
-      ``probe_every − 1`` cheap empty-frontier jobs, against ``depth``
-      probe jobs saved."""
+    - **scale regime** (bigger graphs): the edges are persisted for the
+      walk; per-level checkpoint — the eager checkpoint IS the
+      materializing job, one action per level — with the emptiness probe
+      run only every 4 levels against already-materialized partitions.
+      Join work stays linear in depth; an overshoot past the true fixpoint
+      costs at most 3 cheap empty-frontier jobs, against ``depth`` probe
+      jobs saved."""
     from functools import reduce
 
-    if small_graph_edges is None:
-        small_graph_edges = SMALL_GRAPH_EDGES
-    edges = edges.select("src", "dst").persist()
-    n_edges = edges.count()  # materializes the persist; picks the regime
+    from pyspark.sql import types as T
 
-    if n_edges <= small_graph_edges:
+    edges = edges.select("src", "dst")
+    small = collect_if_small(edges, SMALL_GRAPH_EDGES)
+    if small is not None:
+        import numpy as np
         import pandas as pd
+        import pyarrow as pa
+        import pyarrow.compute as pc
 
-        from pyspark.sql import types as T
-
-        spark = edges.sparkSession
-        # Arrow both ways (collect and createDataFrame are the cost here):
-        # arrow.pyspark.enabled is set at session build (session.py); a
-        # query path must not mutate session config as a side effect.
-        # index the successor map ONCE; each level is a vectorized join
-        # against it (non-unique index duplicates rows — every path
-        # emits, as UNION ALL recursion does)
-        e_idx = edges.toPandas().set_index("src")
-        cur = roots.select("id").toPandas().rename(columns={"id": "root"})
-        cur["node"] = cur["root"]
-        levels = [cur.assign(depth=0)]
-        depth = 0
-        while len(cur) and depth < max_depth:
-            depth += 1
-            cur = (
-                cur.join(e_idx, on="node", how="inner")
-                .loc[:, ["root", "dst"]]
-                .rename(columns={"dst": "node"})
-                .reset_index(drop=True)
-            )
-            if len(cur):
-                levels.append(cur.assign(depth=depth))
-        out = pd.concat(levels, ignore_index=True)
-        out["depth"] = out["depth"].astype("int32")
+        # successor lists are the runs of the src-sorted edge list. Every
+        # dst and root is looked up among the run keys once, as the index
+        # of its run (-1: none, also for NULL); each level then expands
+        # the matched runs with repeat/arange over those indices, and the
+        # output gathers the exact Arrow values at the end. Every path
+        # emits, as UNION ALL recursion does; a NULL node never expands.
+        e = small.filter(pc.is_valid(small["src"])).sort_by("src")
+        runs = pc.run_end_encode(e["src"].combine_chunks())
+        ends = runs.run_ends.to_numpy().astype(np.int64)
+        lens = np.diff(ends, prepend=0)
+        starts = ends - lens
+        dst = e["dst"].combine_chunks()
+        root = roots.select("id").toArrow().column(0).combine_chunks()
+        both = pa.concat_arrays([a.cast(runs.values.type) for a in (dst, root)])
+        found = pd.Index(runs.values.to_numpy(zero_copy_only=False)).get_indexer(
+            both.drop_null().to_numpy(zero_copy_only=False)
+        )
+        run = np.full(len(both), -1)
+        run[both.is_valid().to_numpy(zero_copy_only=False)] = found
+        dst_run, k = run[: len(dst)], run[len(dst) :]
+        ri = np.arange(len(root))  # root of each frontier row
+        root_at, edge_at = [ri], [np.empty(0, np.int64)]
+        for depth in range(1, max_depth + 1):
+            hit = k >= 0
+            cnt = np.zeros(len(k), np.int64)
+            cnt[hit] = lens[k[hit]]
+            if not cnt.any():
+                break
+            row = np.repeat(np.arange(len(k)), cnt)
+            first = np.cumsum(cnt) - cnt
+            pos = starts[k[row]] + np.arange(len(row)) - first[row]
+            ri, k = ri[row], dst_run[pos]
+            root_at.append(ri)
+            edge_at.append(pos)
         schema = T.StructType(
             [
                 T.StructField("root", roots.schema["id"].dataType, True),
@@ -417,8 +427,20 @@ def descendants(
                 T.StructField("depth", T.IntegerType(), False),
             ]
         )
-        return spark.createDataFrame(out, schema)
+        table = pa.table(
+            {
+                "root": root.take(np.concatenate(root_at)),
+                "node": pa.concat_arrays(
+                    [root.cast(dst.type), dst.take(np.concatenate(edge_at))]
+                ),
+                "depth": np.repeat(
+                    np.arange(len(root_at), dtype=np.int32), [len(r) for r in root_at]
+                ),
+            }
+        )
+        return edges.sparkSession.createDataFrame(table, schema)
 
+    edges = edges.persist()
     frontier = roots.select(
         F.col("id").alias("root"), F.col("id").alias("node")
     ).localCheckpoint(eager=True, storageLevel=CKPT_DESER)
@@ -430,15 +452,16 @@ def descendants(
             .localCheckpoint(eager=True, storageLevel=CKPT_DESER)
         )
         levels.append(frontier.withColumn("depth", F.lit(depth)))
-        if depth % probe_every == 0 and frontier.isEmpty():
+        if depth % 4 == 0 and frontier.isEmpty():
             break
+    edges.unpersist()
     return reduce(lambda a, b: a.unionByName(b), levels)
 
 
 def _components_df(spark: SparkSession, src, dst, schema) -> DataFrame:
     """Driver kernel of ``connected_components``' small-graph regime, also
     run by ``dedup.near_dup_clusters``: union-find over the integral pairs
-    ``zip(src, dst)`` (NULLs already dropped), every node labeled with the
+    ``zip(src, dst)`` (no NULLs), every node labeled with the
     minimum id of its component, returned as a (node, component) frame
     of ``schema``."""
     parent: dict = {}
@@ -464,16 +487,8 @@ def _components_df(spark: SparkSession, src, dst, schema) -> DataFrame:
         r_ = find(n_)
         if r_ not in comp_min or n_ < comp_min[r_]:
             comp_min[r_] = n_
-    items = [(n_, comp_min[find(n_)]) for n_ in parent]
-    if not items:
-        return local_rows_df(spark, [], schema)
-    # pandas/Arrow local relation: the Row-list pickle path costs
-    # 0.4+ s per call and scales badly with node count (measured
-    # ~0.5 s of graph_components' exec at sf0.1 was exactly this)
-    import pandas as pd
-
-    return spark.createDataFrame(
-        pd.DataFrame(items, columns=["node", "component"]), schema=schema
+    return local_rows_df(
+        spark, [(n_, comp_min[find(n_)]) for n_ in parent], schema
     )
 
 
@@ -516,7 +531,7 @@ def connected_components(edges: DataFrame, max_iter: int = 32) -> DataFrame:
     replays rounds 1..N-1).
 
     Small-graph fast path: when the edge list is tiny relative to the
-    cluster (``small_graph_edges``, default 2M pairs ≈ tens of MB — the
+    cluster (``SMALL_GRAPH_EDGES``, 2M pairs ≈ tens of MB — the
     same order as a broadcast-join threshold) and node ids are integral,
     the pairs are collected and solved with driver-side union-find in one
     pass, exactly as AQE converts a small shuffle join into a broadcast:
@@ -530,44 +545,31 @@ def connected_components(edges: DataFrame, max_iter: int = 32) -> DataFrame:
     """
     from pyspark.sql.types import IntegralType
 
-    sym = edges.select("src", "dst").unionByName(
-        edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+    # An edge with a NULL endpoint connects nothing. Drop it once, here:
+    # the distributed loop would otherwise label the NULL and its partner.
+    edges = edges.select("src", "dst").filter(
+        F.col("src").isNotNull() & F.col("dst").isNotNull()
     )
-    small_graph_edges = SMALL_GRAPH_EDGES
-    if small_graph_edges > 0 and isinstance(
-        edges.schema["src"].dataType, IntegralType
-    ):
-        # Arrow collect (toPandas), not Row-object collect(): at the 2M-pair
-        # threshold the Row path spends seconds rebuilding Python objects.
-        probe_pdf = (
-            edges.select("src", "dst").limit(small_graph_edges + 1).toPandas()
+    integral = isinstance(edges.schema["src"].dataType, IntegralType)
+    small = collect_if_small(edges, SMALL_GRAPH_EDGES) if integral else None
+    if small is not None:
+        return _components_df(
+            edges.sparkSession,
+            small.column("src").to_numpy().tolist(),
+            small.column("dst").to_numpy().tolist(),
+            edges.select(
+                F.col("src").alias("node"), F.col("src").alias("component")
+            ).schema,
         )
-        if len(probe_pdf) <= small_graph_edges:
-            # NULL endpoints cannot form edges: the distributed path's
-            # equality joins drop them; drop them here too (and avoid a
-            # NaN key that would never satisfy parent[r] == r).
-            probe_pdf = probe_pdf.dropna()
-            out_schema = (
-                edges.select(
-                    F.col("src").alias("node"), F.col("src").alias("component")
-                ).schema
-            )
-            return _components_df(
-                edges.sparkSession,
-                # a nullable column arrives as float64; cast back to exact
-                # ints once the NaNs are gone
-                probe_pdf["src"].astype("int64").tolist(),
-                probe_pdf["dst"].astype("int64").tolist(),
-                out_schema,
-            )
-    sym = sym.persist()
+    sym = edges.unionByName(
+        edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+    ).persist()
     labels = (
         sym.select(F.col("src").alias("node"))
         .distinct()
         .withColumn("component", F.col("node"))
         .localCheckpoint(eager=True, storageLevel=CKPT_DESER)
     )
-    integral = isinstance(edges.schema["src"].dataType, IntegralType)
 
     def label_sum(df):
         # decimal(38,0) so the probe cannot overflow at 1e10+ nodes
@@ -623,89 +625,6 @@ def connected_components(edges: DataFrame, max_iter: int = 32) -> DataFrame:
     return labels
 
 
-def pagerank(
-    edges: DataFrame,
-    damping: float = 0.85,
-    iterations: int = 8,
-) -> DataFrame:
-    """PageRank by power iteration over the edge list. Returns
-    (node, rank) with rank as DECIMAL(38,18).
-
-    Determinism at scale: rank mass is carried in DECIMAL, not DOUBLE —
-    decimal addition is associative, so the per-node contribution sums are
-    identical at any partition count / AQE decision, where double sums
-    would drift in the last ulps and make ranks (and rank-ordered output)
-    run-dependent. Divisions (rank/out_degree, dangling/N) happen at fixed
-    scale with one deterministic rounding per step.
-
-    Per iteration: one join of edges against the current ranks (both
-    pre-partitioned on the join key after the first round — AQE reuses the
-    exchange), one grouped sum, one broadcast of the two scalar masses
-    (dangling + teleport). State is (node, rank) — linear in vertices;
-    lineage is truncated per round (localCheckpoint), else iteration N
-    replays 1..N-1.
-    """
-    DEC = "decimal(38,18)"
-    e = edges.select("src", "dst").persist()
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .union(e.select(F.col("dst").alias("node")))
-        .distinct()
-        .localCheckpoint(eager=True, storageLevel=CKPT_DESER)
-    )
-    n_total = nodes.count()
-    out_deg = e.groupBy(F.col("src").alias("node")).agg(
-        F.count(F.lit(1)).alias("out_degree")
-    )
-    # nodes annotated once: out_degree NULL for dangling (no out-edges)
-    base = nodes.join(out_deg, "node", "left").localCheckpoint(eager=True, storageLevel=CKPT_DESER)
-
-    init = (F.lit(1).cast(DEC) / F.lit(n_total)).cast(DEC)
-    ranks = base.select("node", "out_degree", init.alias("rank")).localCheckpoint(
-        eager=True, storageLevel=CKPT_DESER
-    )
-    d = F.lit(damping).cast("decimal(6,4)")
-    teleport = ((F.lit(1).cast(DEC) - d) / F.lit(n_total)).cast(DEC)
-
-    for _ in range(iterations):
-        dangling = (
-            ranks.filter(F.col("out_degree").isNull())
-            .agg(F.coalesce(F.sum("rank"), F.lit(0)).cast(DEC).alias("dmass"))
-        )
-        contribs = (
-            e.join(ranks, e.src == ranks.node)
-            .select(
-                "dst",
-                (F.col("rank") / F.col("out_degree")).cast(DEC).alias("c"),
-            )
-            .groupBy(F.col("dst").alias("node"))
-            .agg(F.sum("c").cast(DEC).alias("contrib"))
-        )
-        ranks = (
-            base.join(contribs, "node", "left")
-            .crossJoin(F.broadcast(dangling))
-            .select(
-                "node",
-                "out_degree",
-                (
-                    teleport
-                    + (
-                        d
-                        * (
-                            F.coalesce(F.col("contrib"), F.lit(0).cast(DEC))
-                            + (F.col("dmass") / F.lit(n_total)).cast(DEC)
-                        )
-                    ).cast(DEC)
-                )
-                .cast(DEC)
-                .alias("rank"),
-            )
-            .localCheckpoint(eager=True, storageLevel=CKPT_DESER)
-        )
-    e.unpersist()
-    return ranks.select("node", "rank")
-
-
 PAGERANK_SCALE = 10**15
 
 
@@ -726,9 +645,9 @@ def pagerank_int(
     Total mass ≈ ``scale`` (1e15), far under int64; per-iteration mass
     leaks a few units to floor division, identically on every engine.
 
-    Same distributed shape as ``pagerank``: per iteration one
-    edges⋈ranks join + grouped sum, one 1-row dangling-mass broadcast,
-    lineage truncated per round (localCheckpoint).
+    Distributed shape: per iteration one edges⋈ranks join + grouped
+    sum, one 1-row dangling-mass broadcast, lineage truncated per round
+    (localCheckpoint).
 
     Small-graph fast path (same contract and threshold as ``kcore`` /
     ``connected_components``): each distributed round is a checkpoint job
@@ -745,50 +664,48 @@ def pagerank_int(
     """
     from pyspark.sql.types import IntegralType
 
-    if SMALL_GRAPH_EDGES > 0 and isinstance(
-        edges.schema["src"].dataType, IntegralType
+    edges = edges.select("src", "dst")
+    integral = isinstance(edges.schema["src"].dataType, IntegralType)
+    small = collect_if_small(edges, SMALL_GRAPH_EDGES) if integral else None
+    if (
+        small is not None
+        and small.column("src").null_count == 0
+        and small.column("dst").null_count == 0
     ):
-        probe = edges.select("src", "dst").limit(SMALL_GRAPH_EDGES + 1).toPandas()
-        if len(probe) <= SMALL_GRAPH_EDGES and not (
-            probe["src"].isna().any() or probe["dst"].isna().any()
-        ):
-            import numpy as np
-            import pandas as pd
+        import numpy as np
+        import pyarrow as pa
 
-            from pyspark.sql import types as T
+        from pyspark.sql import types as T
 
-            spark = edges.sparkSession
-            node_type = edges.schema["src"].dataType
-            schema = T.StructType(
-                [
-                    T.StructField("node", node_type, True),
-                    T.StructField("rank_scaled", T.LongType(), True),
-                ]
-            )
-            if len(probe) == 0:
-                return local_rows_df(spark, [], schema)
-            s_raw = probe["src"].to_numpy(np.int64)
-            d_raw = probe["dst"].to_numpy(np.int64)
-            nodes = np.unique(np.concatenate([s_raw, d_raw]))
-            n_total = len(nodes)
-            s_i = np.searchsorted(nodes, s_raw)
-            d_i = np.searchsorted(nodes, d_raw)
-            out_deg = np.bincount(s_i, minlength=n_total)  # int64 counts
-            dangling_mask = out_deg == 0
-            tele = (damping_den - damping_num) * scale // (damping_den * n_total)
-            rank = np.full(n_total, scale // n_total, dtype=np.int64)
-            for _ in range(iterations):
-                dmass = int(rank[dangling_mask].sum())
-                per_edge = rank[s_i] // out_deg[s_i]
-                contrib = np.zeros(n_total, dtype=np.int64)
-                np.add.at(contrib, d_i, per_edge)
-                rank = tele + (
-                    damping_num * (contrib + dmass // n_total)
-                ) // damping_den
-            out = pd.DataFrame({"node": nodes, "rank_scaled": rank})
-            return spark.createDataFrame(out, schema)
+        schema = T.StructType(
+            [
+                T.StructField("node", edges.schema["src"].dataType, True),
+                T.StructField("rank_scaled", T.LongType(), True),
+            ]
+        )
+        if small.num_rows == 0:
+            return local_rows_df(edges.sparkSession, [], schema)
+        s_raw = small.column("src").to_numpy()
+        d_raw = small.column("dst").to_numpy()
+        nodes = np.unique(np.concatenate([s_raw, d_raw]))
+        n_total = len(nodes)
+        s_i = np.searchsorted(nodes, s_raw)
+        d_i = np.searchsorted(nodes, d_raw)
+        out_deg = np.bincount(s_i, minlength=n_total)  # int64 counts
+        dangling_mask = out_deg == 0
+        tele = (damping_den - damping_num) * scale // (damping_den * n_total)
+        rank = np.full(n_total, scale // n_total, dtype=np.int64)
+        for _ in range(iterations):
+            dmass = int(rank[dangling_mask].sum())
+            per_edge = rank[s_i] // out_deg[s_i]
+            contrib = np.zeros(n_total, dtype=np.int64)
+            np.add.at(contrib, d_i, per_edge)
+            rank = tele + (damping_num * (contrib + dmass // n_total)) // damping_den
+        return edges.sparkSession.createDataFrame(
+            pa.table({"node": nodes, "rank_scaled": rank}), schema
+        )
 
-    e = edges.select("src", "dst").persist()
+    e = edges.persist()
     nodes = (
         e.select(F.col("src").alias("node"))
         .union(e.select(F.col("dst").alias("node")))
@@ -912,44 +829,32 @@ def kcore(edges: DataFrame, k: int, rounds: int) -> DataFrame:
     # Small-graph fast path (same contract as connected_components'): a
     # pruning round is a full pass over the surviving edges, so on a graph
     # that fits comfortably in driver memory the per-round Spark job floor
-    # dominates the arithmetic by orders of magnitude. Collect once, run
-    # the IDENTICAL simultaneous-pruning rounds vectorized in numpy
-    # (bincount degrees over dense-mapped ids), return via Arrow. Results
-    # are exactly the distributed rounds' (same round semantics, same
-    # early exit); graphs above the threshold stay fully distributed.
-    small_graph_edges = SMALL_GRAPH_EDGES
-    if small_graph_edges > 0 and isinstance(
-        edges.schema["src"].dataType, IntegralType
-    ):
-        probe = edges.select("src", "dst").limit(small_graph_edges + 1).toPandas()
-        if len(probe) <= small_graph_edges:
-            # NULL endpoints cannot participate (the distributed path's
-            # equi-joins drop them); dropping here also keeps the int64
-            # conversion exact instead of NaN-poisoned float64.
-            probe = probe.dropna()
-        if len(probe) == 0:
-            return edges.select("src", "dst").limit(0)
-        if len(probe) <= small_graph_edges:
-            import numpy as np
-            import pandas as pd
+    # dominates the arithmetic by orders of magnitude. The probe is the
+    # edge list; the IDENTICAL simultaneous-pruning rounds run vectorized
+    # in numpy (bincount degrees over dense-mapped ids) and return via
+    # Arrow. Results are exactly the distributed rounds' (same round
+    # semantics, same early exit, NULL endpoints dropped as the joins drop
+    # them); graphs above the threshold stay fully distributed.
+    edges = edges.select("src", "dst")
+    integral = isinstance(edges.schema["src"].dataType, IntegralType)
+    small = collect_if_small(edges, SMALL_GRAPH_EDGES) if integral else None
+    if small is None:
+        return _kcore_rounds(edges, k, rounds)
+    small = small.drop_null()
+    src, dst = _kcore_prune(
+        small.column("src").to_numpy(), small.column("dst").to_numpy(), k, rounds
+    )
+    import pyarrow as pa
 
-            src, dst = _kcore_prune(
-                probe["src"].to_numpy(np.int64),
-                probe["dst"].to_numpy(np.int64),
-                k,
-                rounds,
-            )
-            if len(src) == 0:  # everything pruned — typed empty frame
-                return edges.select("src", "dst").limit(0)
-            spark = edges.sparkSession
-            out = spark.createDataFrame(pd.DataFrame({"src": src, "dst": dst}))
-            src_t = edges.schema["src"].dataType.simpleString()
-            dst_t = edges.schema["dst"].dataType.simpleString()
-            return out.select(
-                F.col("src").cast(src_t).alias("src"),
-                F.col("dst").cast(dst_t).alias("dst"),
-            )
+    return edges.sparkSession.createDataFrame(
+        pa.table({"src": src, "dst": dst}), edges.schema
+    )
 
+
+def _kcore_rounds(edges: DataFrame, k: int, rounds: int) -> DataFrame:
+    """``kcore``'s distributed regime, also run by ``graphq.graph_kcore``
+    above the cap: up to ``rounds`` checkpointed pruning rounds over the
+    symmetric (src, dst) edges, stopping at the fixpoint."""
     alive = edges.select("src", "dst").localCheckpoint(eager=True, storageLevel=CKPT_DESER)
     prev_n = alive.count()
     for _ in range(rounds):

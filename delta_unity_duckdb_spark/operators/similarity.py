@@ -20,7 +20,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
-from delta_unity_duckdb_spark.functions.frames import CKPT_DESER
+from delta_unity_duckdb_spark.functions.frames import CKPT_DESER, collect_if_small
 
 
 def _dot(a: Column, b: Column) -> Column:
@@ -586,17 +586,12 @@ def dense_jaccard_pairs(
     dedups); the bitmask aggregate is bit_or, so duplicate rows cannot
     corrupt the masks, but ``n``'s COUNT(*) would still over-count them.
     """
-    ks = [
-        r[0]
-        for r in uk.select(k_col)
-        .filter(F.col(k_col).isNotNull())
-        .distinct()
-        .limit(max_universe + 1)
-        .collect()
-    ]
-    if len(ks) > max_universe:
+    ks = collect_if_small(
+        uk.select(k_col).filter(F.col(k_col).isNotNull()).distinct(), max_universe
+    )
+    if ks is None:
         return None
-    universe = sorted(int(k) for k in ks)
+    universe = sorted(int(k) for k in ks.column(0).to_pylist())
     K = len(universe)
     n_words = max(1, (K + 63) // 64)
     # n_users: callers that already counted (the regime ladder) pass it
@@ -827,15 +822,8 @@ def jaccard_topk_pairs_dedup(
     ``dense_jaccard_pairs(top_k=...)`` is the right plan). Worst case
     equals the old cost; duplication-heavy data drops to linear + M².
     """
-    ks_probe = [
-        r[0]
-        for r in uk.select(k_col)
-        .filter(F.col(k_col).isNotNull())
-        .distinct()
-        .limit(max_universe + 1)
-        .collect()
-    ]
-    if len(ks_probe) > max_universe:
+    universe = uk.select(k_col).filter(F.col(k_col).isNotNull()).distinct()
+    if collect_if_small(universe, max_universe) is None:
         return None
     spark = uk.sparkSession
     bound = 2 * top_k + 2

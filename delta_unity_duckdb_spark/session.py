@@ -14,6 +14,7 @@ to UTC so results are reproducible across engines and clusters.
 from __future__ import annotations
 
 import os
+import warnings
 
 from pyspark.sql import SparkSession
 
@@ -143,25 +144,29 @@ def get_spark(
         # the most common pruning dimension at lakehouse scale.
         .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
+        .config("spark.ui.enabled", "false")
+    )
+    # Static confs: they take effect only when this call builds the session
+    # (checked after getOrCreate below).
+    static = {
         # Keep generated classes across calls. Spark's 100-entry codegen
         # cache is smaller than one pass's working set (see
         # CODEGEN_CACHE_ENTRIES), so every warm call recompiled every class
         # and re-warmed the JIT. Guava splits the cache into ~4 LRU
         # segments, so the size needs headroom over the working set or it
         # still evicts.
-        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
+        "spark.sql.codegen.cache.maxEntries": str(CODEGEN_CACHE_ENTRIES),
         # No per-call call-site capture: with DataFrame debugging on, every
         # F.*/Column/DataFrame call first makes ~5 py4j round-trips to set
         # and clear its origin (2-3x the round-trips of a whole frame
         # construction). It only decorates error messages.
-        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
+        "spark.python.sql.dataFrameDebugging.enabled": "false",
         # local-mode driver IS the executor: size the heap for iterative
         # graph/dedup checkpoints at the larger synthetic SFs (an 8g heap
         # OOMed k-core's edge checkpoint at sf10), but never past half the
         # machine (a fixed 24g default would swap a 16 GB host); override
         # per-run with SPARK_GRAFT_DRIVER_MEM.
-        .config("spark.driver.memory", driver_mem)
-        .config("spark.ui.enabled", "false")
+        "spark.driver.memory": driver_mem,
         # Result materialization cap. Spark's 1g default fails any query
         # whose ANSWER is big (the skewed-sf100 sessionization result is
         # ~1.1 GiB serialized) even though the driver heap holds it
@@ -171,11 +176,11 @@ def get_spark(
         # clean maxResultSize error into a driver OOM; half the resolved
         # heap keeps the cap meaningfully under it at every size while
         # still letting legitimately large results through on big hosts.
-        .config(
-            "spark.driver.maxResultSize",
-            os.environ.get("SPARK_GRAFT_MAX_RESULT", _default_max_result(driver_mem)),
-        )
-    )
+        "spark.driver.maxResultSize": os.environ.get(
+            "SPARK_GRAFT_MAX_RESULT", _default_max_result(driver_mem)
+        ),
+    }
+    builder = builder.config(map=static)
     # Against a real (standalone) master the executor heap matters and
     # the 1g Spark default is far too small for the scale fixtures;
     # local mode ignores this. Same env var tools/cluster_sim.py uses.
@@ -189,4 +194,24 @@ def get_spark(
             "spark.sql.catalog.spark_catalog",
             "org.apache.spark.sql.delta.catalog.DeltaCatalog",
         )
-    return builder.getOrCreate()
+    spark = builder.getOrCreate()
+    # A session that already existed (one a host process built first)
+    # keeps its own static confs; Spark only logs that. Say which differ:
+    # the driver's in the SparkContext's conf, the SQL ones in the session's.
+    sc_conf = spark.sparkContext.getConf()
+    effective = {
+        k: (sc_conf if k.startswith("spark.driver.") else spark.conf).get(k, None)
+        for k in static
+    }
+    kept = [
+        f"{k}={effective[k]!r} (wanted {v!r})"
+        for k, v in static.items()
+        if effective[k] != v
+    ]
+    if kept:
+        warnings.warn(
+            "get_spark reused an existing session whose static confs differ: "
+            + ", ".join(kept),
+            stacklevel=2,
+        )
+    return spark

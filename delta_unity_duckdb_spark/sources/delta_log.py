@@ -47,6 +47,8 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
+from delta_unity_duckdb_spark.functions.frames import collect_if_small
+
 _COMMIT_DIGITS = 20
 
 # Data-skipping operators understood by ``read_delta(skip_filters=…)``.
@@ -796,22 +798,30 @@ def _probe_source_keys(
     needs.
 
     Single-column keys (the overwhelmingly common merge shape) return the
-    sorted distinct key set, collected with a ``_MERGE_KEYSET_CAP + 1``
-    limit so the driver list stays bounded. Compound keys, and key sets
-    past the cap, return ``None`` plus the per-column min/max envelope as
-    ``>=``/``<=`` filters, computed by one aggregate over the same groups
-    that also carries the duplicate check."""
+    sorted distinct key set, collected by ``collect_if_small`` under
+    ``_MERGE_KEYSET_CAP`` so the driver list stays bounded. Compound keys,
+    and key sets past the cap, return ``None`` plus the per-column min/max
+    envelope as ``>=``/``<=`` filters, computed by one aggregate over the
+    same groups that also carries the duplicate check."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
     grouped = (
         source_df.na.drop(subset=on)
         .groupBy(*on)
         .agg(F.count(F.lit(1)).alias("__rows"))
     )
-    if len(on) == 1:
-        rows = grouped.limit(_MERGE_KEYSET_CAP + 1).collect()
-        if len(rows) <= _MERGE_KEYSET_CAP:
-            if any(r["__rows"] > 1 for r in rows):
-                raise ValueError("source has multiple rows per merge key")
-            return sorted(r[0] for r in rows), []
+    small = collect_if_small(grouped, _MERGE_KEYSET_CAP) if len(on) == 1 else None
+    if small is not None:
+        if (pc.max(small.column("__rows")).as_py() or 0) > 1:
+            raise ValueError("source has multiple rows per merge key")
+        keys = small.column(0).to_pylist()
+        key_type = small.schema.field(0).type
+        if pa.types.is_timestamp(key_type) and key_type.tz:
+            # Arrow returns tz-aware instants; the file-stat comparison
+            # takes them naive in local time, as a Row collect gives them
+            keys = [k.astimezone().replace(tzinfo=None) for k in keys]
+        return sorted(keys), []
 
     bounds = grouped.agg(
         F.max("__rows").alias("__rows"),

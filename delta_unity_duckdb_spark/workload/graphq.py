@@ -10,7 +10,11 @@ from delta_unity_duckdb_spark.operators.graph import (
     one_hop,
 )
 from delta_unity_duckdb_spark.workload.registry import query
-from delta_unity_duckdb_spark.functions.frames import CKPT_DESER
+from delta_unity_duckdb_spark.functions.frames import (
+    CKPT_DESER,
+    collect_if_small,
+    local_rows_df,
+)
 
 # graph_triangles regime ladder (round 10). Driver regime: the (order,
 # part) membership rows are collected (bounded by the limit probe — same
@@ -282,8 +286,9 @@ def graph_triangles_q(spark, sf_dir):
 
     - **Driver regime** (``TRI_DRIVER_MAX_ROWS``): the (order, part)
       membership rows — NOT the quadratic pair set — are one bounded
-      Arrow collect (the ``limit(cap+1)`` probe IS the collect, as in
-      pagerank), and ``operators.graph.copurchase_triangle_stats`` runs
+      Arrow collect (the ``frames.collect_if_small`` regime probe IS the
+      collect, as in every driver kernel), and
+      ``operators.graph.copurchase_triangle_stats`` runs
       the identical dedup → combinations → wedge-close pipeline as
       chunked vectorized numpy (nv²-bitmap closing-edge probes). Round-9
       measured the distributed form's residual as the 49.3 M-wedge
@@ -311,7 +316,6 @@ def graph_triangles_q(spark, sf_dir):
     """
     from pyspark.sql import functions as F
 
-    from delta_unity_duckdb_spark.functions.frames import CKPT_DESER
     from delta_unity_duckdb_spark.operators.graph import copurchase_triangle_stats
     from delta_unity_duckdb_spark.sources.tables import load_table
 
@@ -327,29 +331,15 @@ def graph_triangles_q(spark, sf_dir):
             F.col("l_orderkey").isNotNull() & F.col("l_partkey").isNotNull()
         )
     )
-    if TRI_DRIVER_MAX_ROWS > 0:
-        probe = li.limit(TRI_DRIVER_MAX_ROWS + 1).toPandas()
-        if len(probe) <= TRI_DRIVER_MAX_ROWS:
-            stats = copurchase_triangle_stats(
-                probe["l_orderkey"].to_numpy(), probe["l_partkey"].to_numpy()
+    small = collect_if_small(li, TRI_DRIVER_MAX_ROWS)
+    if small is not None:
+        stats = copurchase_triangle_stats(
+            small.column("l_orderkey").to_numpy(), small.column("l_partkey").to_numpy()
+        )
+        if stats is not None:
+            return local_rows_df(
+                spark, [stats], "n_vertices long, n_edges long, n_triangles long"
             )
-            if stats is not None:
-                import pandas as pd
-
-                # pandas -> Arrow createDataFrame: the Row/pickle list
-                # path costs 0.4-1.9 s PER CALL for one row (measured);
-                # the Arrow path is ~0.04 s
-                return spark.createDataFrame(
-                    pd.DataFrame(
-                        {
-                            "n_vertices": [stats[0]],
-                            "n_edges": [stats[1]],
-                            "n_triangles": [stats[2]],
-                        },
-                        dtype="int64",
-                    ),
-                    "n_vertices long, n_edges long, n_triangles long",
-                )
     ps = li.groupBy("l_orderkey").agg(
         F.sort_array(F.collect_set("l_partkey")).alias("ps")
     )
@@ -457,17 +447,17 @@ def graph_kcore(spark, sf_dir):
 
     Two regimes, chosen by measured size against
     ``graph.SMALL_GRAPH_EDGES`` (read at call time): the checkpointed
-    half-edge list is probed with one bounded Arrow collect; if it fits
+    half-edge list is probed with one ``collect_if_small``; if it fits
     and its ids are integral, the pruning rounds (``graph._kcore_prune``)
     and the four degree statistics run on the driver and the one row
-    returns through ``local_rows_df``. Otherwise ``graph.kcore`` prunes
-    in Spark (each round shuffles only surviving edges) and the
-    statistics are one degree aggregate. Both give the same row."""
+    returns through ``local_rows_df``. Otherwise ``graph._kcore_rounds``
+    prunes in Spark (each round shuffles only surviving edges) with no
+    second probe, and the statistics are one degree aggregate. Both give
+    the same row."""
     import numpy as np
     from pyspark.sql import functions as F
     from pyspark.sql.types import IntegralType
 
-    from delta_unity_duckdb_spark.functions.frames import local_rows_df
     from delta_unity_duckdb_spark.functions.hashing import hash60
     from delta_unity_duckdb_spark.operators import graph as G
     from delta_unity_duckdb_spark.sources.tables import load_table
@@ -513,34 +503,34 @@ def graph_kcore(spark, sf_dir):
     # exchange reuse to fire for each branch.
     half = half.localCheckpoint(eager=True, storageLevel=CKPT_DESER)
     k, rounds = 6, 12
-    cap = G.SMALL_GRAPH_EDGES
-    if cap > 0 and all(isinstance(f.dataType, IntegralType) for f in half.schema):
-        t = half.limit(cap + 1).toArrow()
-        if t.num_rows <= cap:
-            # NULL endpoints never survive the distributed rounds' joins
-            t = t.drop_null()
-            s_raw = t.column("src").to_numpy().astype(np.int64)
-            d_raw = t.column("dst").to_numpy().astype(np.int64)
-            src, _ = G._kcore_prune(
-                np.concatenate([s_raw, d_raw]),
-                np.concatenate([d_raw, s_raw]),
-                k,
-                rounds,
-            )
-            deg = np.unique(src, return_counts=True)[1]
-            row = (len(deg), len(src) // 2) + (
-                (int(deg.min()), int(deg.max())) if len(deg) else (0, 0)
-            )
-            return local_rows_df(
-                spark,
-                [row],
-                "n_core_vertices bigint, n_core_edges bigint,"
-                " min_degree bigint, max_degree bigint",
-            )
+    integral = all(isinstance(f.dataType, IntegralType) for f in half.schema)
+    small = collect_if_small(half, G.SMALL_GRAPH_EDGES) if integral else None
+    if small is not None:
+        # NULL endpoints never survive the distributed rounds' joins
+        small = small.drop_null()
+        s_raw = small.column("src").to_numpy()
+        d_raw = small.column("dst").to_numpy()
+        src, _ = G._kcore_prune(
+            np.concatenate([s_raw, d_raw]),
+            np.concatenate([d_raw, s_raw]),
+            k,
+            rounds,
+        )
+        deg = np.unique(src, return_counts=True)[1]
+        row = (len(deg), len(src) // 2) + (
+            (int(deg.min()), int(deg.max())) if len(deg) else (0, 0)
+        )
+        return local_rows_df(
+            spark,
+            [row],
+            "n_core_vertices bigint, n_core_edges bigint,"
+            " min_degree bigint, max_degree bigint",
+        )
     edges = half.unionByName(
         half.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     )
-    core = G.kcore(edges, k=k, rounds=rounds)
+    # the probe above already ran: go straight to the distributed rounds
+    core = G._kcore_rounds(edges, k=k, rounds=rounds)
     # All four outputs derive from the degree frame alone: over symmetric
     # edges Σd = 2|E|, so n_core_edges = Σd div 2 — one aggregation
     # branch, no second pass over core, no cross join (the old two-branch

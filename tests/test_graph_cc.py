@@ -42,15 +42,25 @@ def test_direction_is_ignored(spark):
 
 
 class TestPagerank:
-    def _pr(self, spark, rows, **kw):
-        from delta_unity_duckdb_spark.operators.graph import pagerank
+    """Invariants of ``pagerank_int`` (scaled-integer ranks)."""
 
-        e = spark.createDataFrame(rows, ["src", "dst"])
-        return {r["node"]: float(r["rank"]) for r in pagerank(e, **kw).collect()}
+    def _pr(self, spark, rows, **kw):
+        from delta_unity_duckdb_spark.operators.graph import pagerank_int
+
+        e = spark.createDataFrame(rows, "src long, dst long")
+        return {r["node"]: r["rank_scaled"] for r in pagerank_int(e, **kw).collect()}
 
     def test_mass_conserved(self, spark):
-        ranks = self._pr(spark, [(1, 2), (2, 3), (3, 1), (4, 1)])
-        assert abs(sum(ranks.values()) - 1.0) < 1e-9
+        from delta_unity_duckdb_spark.operators.graph import PAGERANK_SCALE
+
+        edges = [(1, 2), (2, 3), (3, 1), (4, 1)]
+        ranks = self._pr(spark, edges)
+        # each floor division leaks under one unit: the initial share per
+        # node, then per iteration rank÷out_degree per edge and, per node,
+        # the dangling share, the damping division and the teleport term
+        n = len(ranks)
+        leak = n + 8 * (len(edges) + 3 * n)
+        assert PAGERANK_SCALE - leak <= sum(ranks.values()) <= PAGERANK_SCALE
 
     def test_star_center_dominates(self, spark):
         ranks = self._pr(spark, [(i, 0) for i in range(1, 8)])
@@ -61,17 +71,18 @@ class TestPagerank:
         ranks = self._pr(spark, [(1, 2), (2, 3), (3, 4)])
         assert ranks[1] < ranks[2] < ranks[3] < ranks[4]
 
-    def test_partition_count_independent(self, spark):
-        """Exact-decimal arithmetic ⇒ bit-identical ranks at any
-        parallelism (double sums would drift)."""
-        from delta_unity_duckdb_spark.operators.graph import pagerank
+    def test_partition_count_independent(self, spark, monkeypatch):
+        """Integer arithmetic ⇒ bit-identical ranks at any parallelism,
+        in the distributed regime too."""
+        import delta_unity_duckdb_spark.operators.graph as G
 
+        monkeypatch.setattr(G, "SMALL_GRAPH_EDGES", 0)
         rows = [(i, (i * 7) % 50) for i in range(200) if i != (i * 7) % 50]
-        e1 = spark.createDataFrame(rows, ["src", "dst"]).repartition(1)
-        e2 = spark.createDataFrame(rows, ["src", "dst"]).repartition(13)
-        r1 = {r["node"]: r["rank"] for r in pagerank(e1, iterations=3).collect()}
-        r2 = {r["node"]: r["rank"] for r in pagerank(e2, iterations=3).collect()}
-        assert r1 == r2  # exact decimal equality, not approx
+        e1 = spark.createDataFrame(rows, "src long, dst long").repartition(1)
+        e2 = spark.createDataFrame(rows, "src long, dst long").repartition(13)
+        r1 = {r["node"]: r["rank_scaled"] for r in G.pagerank_int(e1, iterations=3).collect()}
+        r2 = {r["node"]: r["rank_scaled"] for r in G.pagerank_int(e2, iterations=3).collect()}
+        assert r1 == r2
 
 
 def test_kcore_fixpoint_and_nesting(spark, sf_dir):
@@ -274,3 +285,15 @@ def test_fast_paths_tolerate_null_endpoints(spark):
     assert {(r["src"], r["dst"]) for r in core.collect()} == {
         (1, 2), (2, 3), (2, 1), (3, 2)
     }
+
+
+def test_connected_components_drops_null_endpoint_edges_in_both_regimes(spark, monkeypatch):
+    """An edge with a NULL endpoint connects nothing: neither the NULL nor
+    its otherwise isolated partner gets a label, in either regime."""
+    import delta_unity_duckdb_spark.operators.graph as G
+
+    edges = spark.createDataFrame([(1, 2), (None, 5), (6, None)], "src long, dst long")
+    fast = {tuple(r) for r in G.connected_components(edges).collect()}
+    monkeypatch.setattr(G, "SMALL_GRAPH_EDGES", 0)
+    dist = {tuple(r) for r in G.connected_components(edges).collect()}
+    assert fast == dist == {(1, 1), (2, 1)}

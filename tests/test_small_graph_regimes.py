@@ -150,3 +150,86 @@ def test_graph_kcore_regimes_prune_to_nothing(spark, tmp_path, monkeypatch):
     (src_in, _, _, _), (src_out, _) = calls[0]
     assert len(calls) == 1 and len(src_in) > 0 and len(src_out) == 0
     assert fast == dist == [(0, 0, 0, 0)]
+
+
+# ids past 2**53, where float64 cannot tell neighbours apart
+A, B, C = 2**53 + 1, 2**53 + 3, 2**53 + 5
+
+
+def test_64_bit_ids_survive_both_regimes(spark, monkeypatch):
+    """Ids near 2**53 beside a NULL endpoint: every driver kernel reads
+    them exactly, so each gives the distributed regime's rows, and those
+    rows hold only input ids."""
+    edges = spark.createDataFrame(
+        [(A, B), (B, C), (C, A), (None, C)], "src long, dst long"
+    )
+    sym = edges.union(edges.selectExpr("dst as src", "src as dst"))
+    triangle = edges.filter("src IS NOT NULL")
+    vecs = spark.createDataFrame(
+        [(A, [1.0, 0.0]), (B, [0.0, 1.0]), (C, [1.0, 0.001]), (None, [1.0, 0.0])],
+        "id long, v array<double>",
+    )
+
+    def rows(df):
+        return Counter(tuple(r) for r in df.collect())
+
+    def run():
+        return {
+            "cc": rows(G.connected_components(edges)),
+            "core": rows(G.kcore(sym, k=2, rounds=4)),
+            "pr": rows(G.pagerank_int(triangle, iterations=3)),
+            "pr_null": rows(G.pagerank_int(edges, iterations=3)),
+            "dedup": rows(D.dedup_embedding_cosine(vecs, "id", "v", 0.99).select("id")),
+        }
+
+    cc_calls = _spy(monkeypatch, G, "_components_df")
+    core_calls = _spy(monkeypatch, G, "_kcore_prune")
+    fast = run()
+    cand = D._cosine_candidates_driver(vecs, "id", "v", 0.99)
+    assert len(cc_calls) == 1 and len(core_calls) == 1  # driver regime taken
+    monkeypatch.setattr(G, "SMALL_GRAPH_EDGES", 0)
+    monkeypatch.setattr(D, "EMB_DRIVER_MAX_VECTORS", 0)
+    dist = run()
+    assert D._cosine_candidates_driver(vecs, "id", "v", 0.99) is None
+
+    assert fast == dist
+    assert fast["cc"] == Counter({(A, A): 1, (B, A): 1, (C, A): 1})
+    assert set(fast["core"]) == {(A, B), (B, C), (C, A), (B, A), (C, B), (A, C)}
+    assert {n for n, _ in fast["pr"]} == {A, B, C}
+    assert {n for n, _ in fast["pr_null"]} == {A, B, C, None}
+    assert [tuple(r) for r in cand.collect()] == [(A, C)]
+    assert fast["dedup"] == Counter([(A,), (B,), (None,)])  # C duplicates A
+
+
+def test_graph_kcore_probes_once_above_the_cap(spark, sf_dir, monkeypatch, count_jobs):
+    """Above the cap, graph_kcore's own probe is the only one: the
+    distributed rounds run without graph.kcore probing the edges again."""
+    # driver regime; also leaves the table's one-time load jobs behind
+    fast = graph_kcore(spark, sf_dir).collect()
+    monkeypatch.setattr(G, "SMALL_GRAPH_EDGES", 0)
+    no_probe, n0 = count_jobs(lambda: graph_kcore(spark, sf_dir).collect())
+    monkeypatch.setattr(G, "SMALL_GRAPH_EDGES", 1)
+    one_probe, n1 = count_jobs(lambda: graph_kcore(spark, sf_dir).collect())
+    assert one_probe == no_probe == fast
+    assert n1 == n0 + 1, (n0, n1)
+
+
+def test_descendants_regimes_and_driver_jobs(spark, monkeypatch, count_jobs):
+    """Every path emits (duplicate edges twice), a NULL node is emitted
+    and never expands, ids past 2**53 stay exact; the driver regime is
+    the probe plus the roots collect."""
+    edges = spark.createDataFrame(
+        [(A, B), (A, B), (B, C), (C, None), (None, A)], "src long, dst long"
+    )
+    roots = spark.createDataFrame([(A,), (None,)], "id long")
+
+    def rows():
+        return Counter(tuple(r) for r in G.descendants(edges, roots, max_depth=6).collect())
+
+    fast, jobs = count_jobs(rows)
+    monkeypatch.setattr(G, "SMALL_GRAPH_EDGES", 0)
+    dist = rows()
+    assert fast == dist == Counter(
+        {(A, A, 0): 1, (None, None, 0): 1, (A, B, 1): 2, (A, C, 2): 2, (A, None, 3): 2}
+    )
+    assert jobs == 2

@@ -1,6 +1,7 @@
 """A warm call reuses what the first call built: the engine's session keeps
 Spark's generated classes across calls (a codegen cache sized past one
-pass's working set) and skips pyspark's per-call call-site capture."""
+pass's working set) and skips pyspark's per-call call-site capture. A
+reused session that kept other static confs says so."""
 
 from __future__ import annotations
 
@@ -46,3 +47,21 @@ def test_warm_curation_pass_compiles_nothing(spark, sf_dir):
 
     one_pass()
     assert one_pass() == 0
+
+
+def test_reused_session_warns_about_static_confs_it_kept(spark, monkeypatch):
+    import warnings
+
+    from delta_unity_duckdb_spark import session as S
+
+    def warnings_of_get_spark():
+        with warnings.catch_warnings(record=True) as caught:
+            warnings.simplefilter("always")
+            assert S.get_spark(master="local[8]") is spark
+        return [str(w.message) for w in caught if "get_spark" in str(w.message)]
+
+    assert warnings_of_get_spark() == []
+    monkeypatch.setattr(S, "CODEGEN_CACHE_ENTRIES", 4097)
+    (message,) = warnings_of_get_spark()
+    assert "spark.sql.codegen.cache.maxEntries='4096' (wanted '4097')" in message
+    assert message.count("=") == 1  # names no other conf
