@@ -591,6 +591,12 @@ def dense_jaccard_pairs(
     )
     if ks is None:
         return None
+    return _dense_jaccard_tiles(uk, ks, user_col, k_col, block_rows, top_k, n_users)
+
+
+def _dense_jaccard_tiles(uk, ks, user_col, k_col, block_rows, top_k, n_users):
+    """``dense_jaccard_pairs`` past its universe probe: ``ks`` is the
+    collected table of ``uk``'s distinct non-NULL elements."""
     universe = sorted(int(k) for k in ks.column(0).to_pylist())
     K = len(universe)
     n_words = max(1, (K + 63) // 64)
@@ -822,8 +828,10 @@ def jaccard_topk_pairs_dedup(
     ``dense_jaccard_pairs(top_k=...)`` is the right plan). Worst case
     equals the old cost; duplication-heavy data drops to linear + M².
     """
-    universe = uk.select(k_col).filter(F.col(k_col).isNotNull()).distinct()
-    if collect_if_small(universe, max_universe) is None:
+    ks = collect_if_small(
+        uk.select(k_col).filter(F.col(k_col).isNotNull()).distinct(), max_universe
+    )
+    if ks is None:
         return None
     spark = uk.sparkSession
     bound = 2 * top_k + 2
@@ -868,8 +876,11 @@ def jaccard_topk_pairs_dedup(
             F.lit(None).cast("long").alias(k_col),
         )
     )
-    cross = dense_jaccard_pairs(
-        mask_rows, user_col=user_col, k_col=k_col, max_universe=max_universe
+    # the masks' non-NULL elements are exactly uk's, so the universe
+    # collected above is theirs too, and their users are the n_masks
+    # distinct reps: the tiles need neither a second probe nor a count
+    cross = _dense_jaccard_tiles(
+        mask_rows, ks, user_col, k_col, block_rows=2048, top_k=None, n_users=n_masks
     )
     reps = groups.select(
         F.col("rep"), "members", "cnt", "n", F.size("ks").alias("sz")

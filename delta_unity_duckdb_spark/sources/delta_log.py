@@ -40,11 +40,12 @@ import os
 import shutil
 import time
 import uuid
-from collections.abc import Collection, Iterator, Sequence
+from collections.abc import Callable, Collection, Iterator, Sequence
 from functools import reduce
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 from pyspark.sql.types import StructType
 
 from delta_unity_duckdb_spark.functions.frames import collect_if_small
@@ -113,6 +114,7 @@ def _file_stats_json(path: str) -> str | None:
     normalize) are simply omitted — skipping is advisory, absence is safe.
     """
     try:
+        import pyarrow as pa
         import pyarrow.parquet as pq
     except Exception:  # pragma: no cover - pyarrow is baked in
         return None
@@ -158,7 +160,12 @@ def _file_stats_json(path: str) -> str | None:
                 maxs.pop(name, None)
                 nulls.pop(name, None)
                 continue
-            lo, hi = norm(st.min), norm(st.max)
+            try:
+                lo, hi = norm(st.min), norm(st.max)
+            except pa.ArrowNotImplementedError:
+                # pyarrow cannot read some statistics back (a decimal
+                # Spark stores as INT32/INT64)
+                lo = hi = None
             if lo is None or hi is None:
                 dropped.add(name)
                 mins.pop(name, None)
@@ -552,21 +559,28 @@ def _add_action(table_path: str, rel: str, data_change: bool = True) -> dict:
 
 
 def _stage_files(
-    df: DataFrame,
+    data: DataFrame | Callable[[str], None],
     table_path: str,
     partition_by: list[str],
     data_change: bool = True,
 ) -> list[dict]:
-    """Write ``df`` as parquet into the table directory under unique names
+    """Write ``data`` as parquet into the table directory under unique names
     (invisible until committed) and return the add actions, stats included.
-    The staging directory is removed whether or not the write succeeds."""
+    ``data`` is a DataFrame (one Spark write) or a function that writes
+    parquet files into the directory it is given (the driver regime of
+    ``merge_delta``). The staging directory is removed whether or not the
+    write succeeds."""
     stage_token = uuid.uuid4().hex[:12]
     stage_dir = os.path.join(table_path, f"_staging_{stage_token}")
-    writer = df.write.mode("overwrite")
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
     try:
-        writer.parquet(stage_dir)
+        if isinstance(data, DataFrame):
+            writer = data.write.mode("overwrite")
+            if partition_by:
+                writer = writer.partitionBy(*partition_by)
+            writer.parquet(stage_dir)
+        else:
+            os.makedirs(stage_dir)
+            data(stage_dir)
         adds: list[dict] = []
         for root, _dirs, files in os.walk(stage_dir):
             for fname in files:
@@ -784,50 +798,72 @@ def _commit(
         os.unlink(tmp)
 
 
-# Above this many distinct single-column keys, merge pruning falls back
-# from the exact key-set probe to the min/max envelope (the collected key
-# list must stay driver-small).
+# Above this many non-NULL single-column source keys, merge pruning falls
+# back from the exact key-set probe to the min/max envelope (the collected
+# key list must stay driver-small).
 _MERGE_KEYSET_CAP = 100_000
+
+# A single-column merge into an unpartitioned table runs on the driver
+# (``_driver_merge_writer``) when the touched files hold at most this many
+# rows by their log ``numRecords`` and the source holds at most this many
+# rows. The rewrite streams one record batch at a time, so the cap bounds
+# the single-threaded pyarrow pass against Spark's parallel write, not
+# driver memory. A 240-row merge into one touched file of orders rows, on
+# a 4-vCPU host, warm: 250k rows took 0.20-0.34 s on the driver against
+# 0.68-1.09 s with Spark; at 1M rows both took about 2 s.
+_MERGE_DRIVER_ROWS = 250_000
+
+# Spark types the driver regime reads and writes through Arrow without
+# loss; a table with any other column type merges with Spark.
+_DRIVER_MERGE_TYPES = (
+    T.BooleanType, T.ByteType, T.ShortType, T.IntegerType, T.LongType,
+    T.FloatType, T.DoubleType, T.DecimalType, T.StringType, T.BinaryType,
+    T.DateType, T.TimestampType, T.TimestampNTZType,
+)
 
 
 def _probe_source_keys(
     source_df: DataFrame, on: list[str]
 ) -> tuple[list | None, list[tuple[str, str, object]]]:
-    """The merge's one pre-pass over the source: group the non-NULL keys,
-    raise if any key holds more than one row, and return what file pruning
-    needs.
+    """The merge's one pre-pass over the source: raise if any non-NULL key
+    holds more than one row, and return what file pruning needs.
 
-    Single-column keys (the overwhelmingly common merge shape) return the
-    sorted distinct key set, collected by ``collect_if_small`` under
-    ``_MERGE_KEYSET_CAP`` so the driver list stays bounded. Compound keys,
-    and key sets past the cap, return ``None`` plus the per-column min/max
-    envelope as ``>=``/``<=`` filters, computed by one aggregate over the
-    same groups that also carries the duplicate check."""
+    Single-column keys (the overwhelmingly common merge shape) collect only
+    the non-NULL key column with ``collect_if_small`` under
+    ``_MERGE_KEYSET_CAP``: one job with no shuffle, after which pyarrow
+    checks for duplicates and the sorted distinct key set is returned.
+    Compound keys, and keys past the cap, return ``None`` plus the
+    per-column min/max envelope as ``>=``/``<=`` filters, computed by one
+    grouped aggregate that also carries the duplicate check."""
     import pyarrow as pa
     import pyarrow.compute as pc
 
-    grouped = (
-        source_df.na.drop(subset=on)
-        .groupBy(*on)
-        .agg(F.count(F.lit(1)).alias("__rows"))
-    )
-    small = collect_if_small(grouped, _MERGE_KEYSET_CAP) if len(on) == 1 else None
+    non_null = source_df.na.drop(subset=on)
+    small = None
+    if len(on) == 1:
+        small = collect_if_small(non_null.select(on[0]), _MERGE_KEYSET_CAP)
     if small is not None:
-        if (pc.max(small.column("__rows")).as_py() or 0) > 1:
+        col = small.column(0)
+        distinct = pc.unique(col)
+        if len(distinct) < len(col):
             raise ValueError("source has multiple rows per merge key")
-        keys = small.column(0).to_pylist()
-        key_type = small.schema.field(0).type
-        if pa.types.is_timestamp(key_type) and key_type.tz:
+        keys = distinct.to_pylist()
+        if pa.types.is_timestamp(col.type) and col.type.tz:
             # Arrow returns tz-aware instants; the file-stat comparison
             # takes them naive in local time, as a Row collect gives them
             keys = [k.astimezone().replace(tzinfo=None) for k in keys]
         return sorted(keys), []
 
-    bounds = grouped.agg(
-        F.max("__rows").alias("__rows"),
-        *[F.min(c).alias(f"lo_{c}") for c in on],
-        *[F.max(c).alias(f"hi_{c}") for c in on],
-    ).collect()[0]
+    bounds = (
+        non_null.groupBy(*on)
+        .agg(F.count(F.lit(1)).alias("__rows"))
+        .agg(
+            F.max("__rows").alias("__rows"),
+            *[F.min(c).alias(f"lo_{c}") for c in on],
+            *[F.max(c).alias(f"hi_{c}") for c in on],
+        )
+        .collect()[0]
+    )
     if (bounds["__rows"] or 0) > 1:
         raise ValueError("source has multiple rows per merge key")
     overlap: list[tuple[str, str, object]] = []
@@ -836,6 +872,139 @@ def _probe_source_keys(
         if lo is not None:
             overlap.extend([(c, ">=", lo), (c, "<=", hi)])
     return None, overlap
+
+
+def _driver_merge_source(
+    snap: DeltaSnapshot,
+    source_df: DataFrame,
+    on: list[str],
+    keys: list | None,
+    touched: dict[str, dict],
+):
+    """The merge source as a pyarrow Table in the table's Arrow schema when
+    the merge fits the driver regime, else ``None``.
+
+    It fits when the key is one column whose exact key set was collected
+    (``keys``), the table is unpartitioned, every column has a type in
+    ``_DRIVER_MERGE_TYPES`` with the key not floating point (Spark's join
+    equates NaNs and signed zeros, Arrow's ``is_in`` does not), the source
+    columns have the table's types, the touched files' ``numRecords`` sum
+    to at most ``_MERGE_DRIVER_ROWS``, and the source itself does: the
+    source is then collected by one ``collect_if_small``."""
+    schema = snap.schema
+    if keys is None or snap.partition_columns:
+        return None
+    if not all(isinstance(f.dataType, _DRIVER_MERGE_TYPES) for f in schema.fields):
+        return None
+    if isinstance(schema[on[0]].dataType, (T.FloatType, T.DoubleType)):
+        return None
+    if [f.dataType for f in source_df.schema.fields] != [f.dataType for f in schema.fields]:
+        return None
+    rows = 0
+    for add in touched.values():
+        try:
+            rows += json.loads(add["stats"])["numRecords"]
+        except (KeyError, TypeError, ValueError):
+            return None  # no usable stats: the size is unknown
+    if rows > _MERGE_DRIVER_ROWS:
+        return None
+    source = collect_if_small(source_df, _MERGE_DRIVER_ROWS)
+    if source is None:
+        return None
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    # every field nullable, as Spark writes data files: a NULL key may land
+    # in a column the table schema declares NOT NULL
+    return source.cast(pa.schema([f.with_nullable(True) for f in to_arrow_schema(schema)]))
+
+
+def _driver_merge_writer(
+    spark: SparkSession,
+    snap: DeltaSnapshot,
+    touched: dict[str, dict],
+    key: str,
+    source,
+    when_matched: str,
+    insert_not_matched: bool,
+    constraints: dict[str, str],
+):
+    """The driver regime's file writer for ``_stage_files`` and the dict it
+    fills with ``rows_matched``.
+
+    Each touched file streams through a buffered ``pyarrow.parquet``
+    reader one record batch at a time. A row whose key is in the source
+    counts as matched and is dropped; the others stream into one new file
+    per touched file. Columns a file predates (``merge_schema``) read as
+    NULL, and INT96 timestamps are read as microseconds. The updated and
+    inserted source rows are checked against the table's CHECK
+    constraints, then written as one file each, so inserts past the
+    table's key range never widen the kept files' [min,max]. NULL keys
+    never match: a NULL-keyed source row is an insert."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    schema = source.schema
+    src_keys = source.column(key).drop_null().combine_chunks()
+    outcome = {"rows_matched": 0}
+
+    def conform(batch):
+        names = batch.schema.names
+        return pa.Table.from_arrays(
+            [
+                batch.column(names.index(f.name)).cast(f.type)
+                if f.name in names
+                else pa.nulls(batch.num_rows, f.type)
+                for f in schema
+            ],
+            schema=schema,
+        )
+
+    def write(stage_dir: str) -> None:
+        def out(name: str) -> str:
+            return os.path.join(stage_dir, f"part-{name}-{uuid.uuid4().hex}.parquet")
+
+        hits = []
+        for path in sorted(touched):
+            pf = pq.ParquetFile(
+                os.path.join(snap.table_path, path),
+                buffer_size=1 << 20,
+                coerce_int96_timestamp_unit="us",
+            )
+            columns = [n for n in schema.names if n in pf.schema_arrow.names]
+            writer = None
+            try:
+                for batch in pf.iter_batches(batch_size=16_384, columns=columns):
+                    rows = conform(batch)
+                    hit = pc.is_in(rows.column(key), value_set=src_keys)
+                    n_hit = pc.sum(hit).as_py() or 0
+                    if n_hit:
+                        outcome["rows_matched"] += n_hit
+                        hits.append(pc.filter(rows.column(key), hit))
+                        rows = rows.filter(pc.invert(hit))
+                    if rows.num_rows:
+                        writer = writer or pq.ParquetWriter(out("kept"), schema)
+                        writer.write_table(rows)
+            finally:
+                if writer is not None:
+                    writer.close()
+
+        matched_keys = pa.chunked_array(hits, type=src_keys.type).combine_chunks()
+        in_target = pc.is_in(source.column(key), value_set=matched_keys)
+        pieces = []
+        if when_matched == "update":
+            pieces.append(("update", source.filter(in_target)))
+        if insert_not_matched:
+            pieces.append(("insert", source.filter(pc.invert(in_target))))
+        added = pa.concat_tables([t for _, t in pieces]) if pieces else None
+        if added is not None and added.num_rows and constraints:
+            _enforce_constraints(spark.createDataFrame(added), constraints)
+        for name, table in pieces:
+            if table.num_rows:
+                pq.write_table(table, out(name))
+
+    return write, outcome
 
 
 def _files_possibly_matching(
@@ -902,20 +1071,35 @@ def merge_delta(
     delta_to_postgres_scd.py:242-261 — generalized beyond SCD2):
     copy-on-write at FILE granularity, driven by the per-file stats.
 
-    1. One grouped pre-pass over the source (``_probe_source_keys``)
-       checks that no key holds two rows and returns the exact key set
-       (single-column keys within ``_MERGE_KEYSET_CAP``) or the per-column
-       min/max envelope (compound keys, larger key sets).
+    1. One pre-pass over the source (``_probe_source_keys``) checks that
+       no key holds two rows and returns the exact key set (single-column
+       keys within ``_MERGE_KEYSET_CAP``: a key-only collect, no shuffle)
+       or the per-column min/max envelope (compound keys, larger key
+       sets: one grouped aggregate).
     2. The log alone then decides which target files may hold a source
        key; every other file PROVABLY contains no matching key and is
        never read, never rewritten. At 100 TB with key-clustered files
        (compaction/Z-order keep them clustered), a point-ish merge touches
        a handful of files instead of the table.
-    3. One write job re-emits the touched files: their rows whose key the
-       source lacks, plus the matched source rows (``when_matched=
-       "update"``) and the unmatched ones (``insert_not_matched``).
-       ``rows_matched`` is an ``Observation`` on the touched-rows ⟕
-       source-keys join inside that same job, so no separate count runs.
+    3. The touched files are re-emitted: their rows whose key the source
+       lacks, plus the matched source rows (``when_matched="update"``) and
+       the unmatched ones (``insert_not_matched``), updates and inserts in
+       files of their own. Two regimes do it with the same result:
+
+       - **driver**: a single-column key with its exact key set, an
+         unpartitioned table whose columns Arrow carries
+         (``_DRIVER_MERGE_TYPES``, key not floating point), a source with
+         the table's column types, and touched files (by log
+         ``numRecords``) and a source of at most ``_MERGE_DRIVER_ROWS``
+         rows each. The source is collected by one more
+         ``collect_if_small`` and pyarrow streams the touched files
+         (``_driver_merge_writer``): no further Spark job.
+       - **distributed**, for everything else: one Spark write job, with
+         ``rows_matched`` an ``Observation`` on the touched-rows ⟕
+         source-keys join inside that same job.
+
+       The rows the merge adds (updates and inserts) are checked against
+       the table's CHECK constraints before anything is committed.
     4. One atomic commit: removes for touched files + adds for their
        replacements. Readers of the old version are unaffected; time
        travel keeps working.
@@ -939,34 +1123,44 @@ def merge_delta(
     if missing:
         raise ValueError(f"merge keys not in schema: {missing}")
     source_df = source_df.select(target_cols)
+    constraints = _check_constraints(snap.metadata)
 
     keys, overlap = _probe_source_keys(source_df, on)
     touched = _files_possibly_matching(snap, on, keys, overlap)
     untouched = {p: a for p, a in snap.adds.items() if p not in touched}
 
-    touched_df = _df_for_adds(spark, snap, touched)
-    matched = Observation()
-    # Source keys are unique (checked above), so the left join neither
-    # drops nor repeats a touched row; a flagged row is a matched one.
-    kept = (
-        touched_df.join(source_df.select(*on, F.lit(True).alias("__matched")), on, "left")
-        .observe(matched, F.count_if(F.col("__matched")).alias("n"))
-        .filter(F.col("__matched").isNull())
-        .select(target_cols)
-    )
-    # Updates and inserts stay separate union branches, so they land in
-    # separate files: inserts past the table's key range never widen the
-    # [min,max] of the rewritten key window, and later merges keep
-    # pruning to the files they touch.
-    pieces = [kept]
-    if when_matched == "update":
-        pieces.append(source_df.join(touched_df.select(on), on, "left_semi"))
-    if insert_not_matched:
-        pieces.append(source_df.join(touched_df.select(on), on, "left_anti"))
-    new_data = reduce(lambda a, b: a.unionByName(b), pieces)
-
-    adds = _stage_files(new_data, table_path, snap.partition_columns)
-    n_matched = matched.get["n"]
+    source = _driver_merge_source(snap, source_df, on, keys, touched)
+    if source is not None:
+        write, outcome = _driver_merge_writer(
+            spark, snap, touched, on[0], source, when_matched, insert_not_matched, constraints
+        )
+        adds = _stage_files(write, table_path, [])
+        n_matched = outcome["rows_matched"]
+    else:
+        touched_df = _df_for_adds(spark, snap, touched)
+        matched = Observation()
+        # Source keys are unique (checked above), so the left join neither
+        # drops nor repeats a touched row; a flagged row is a matched one.
+        kept = (
+            touched_df.join(source_df.select(*on, F.lit(True).alias("__matched")), on, "left")
+            .observe(matched, F.count_if(F.col("__matched")).alias("n"))
+            .filter(F.col("__matched").isNull())
+            .select(target_cols)
+        )
+        # Updates and inserts stay separate union branches, so they land in
+        # separate files: inserts past the table's key range never widen the
+        # [min,max] of the rewritten key window, and later merges keep
+        # pruning to the files they touch.
+        added = []
+        if when_matched == "update":
+            added.append(source_df.join(touched_df.select(on), on, "left_semi"))
+        if insert_not_matched:
+            added.append(source_df.join(touched_df.select(on), on, "left_anti"))
+        if added:
+            _enforce_constraints(reduce(lambda a, b: a.unionByName(b), added), constraints)
+        new_data = reduce(lambda a, b: a.unionByName(b), [kept, *added])
+        adds = _stage_files(new_data, table_path, snap.partition_columns)
+        n_matched = matched.get["n"]
     version = _commit(
         table_path,
         snap.version,
@@ -1043,6 +1237,8 @@ def _rewrite_matching(
         }
     kept = touched_df.filter(~pred | F.isnull(pred))
     replacement = transform(matching)
+    if replacement is not None:
+        _enforce_constraints(replacement, _check_constraints(snap.metadata))
     new_data = kept.unionByName(replacement) if replacement is not None else kept
 
     adds = _stage_files(new_data, table_path, snap.partition_columns)
@@ -1500,13 +1696,18 @@ def _check_constraints(metadata: dict | None) -> dict[str, str]:
 
 
 def _enforce_constraints(df: DataFrame, constraints: dict[str, str]) -> None:
-    """Raise if any row violates a CHECK constraint. SQL CHECK semantics:
-    a row violates only when the expression is FALSE — NULL passes."""
-    for name, expr in constraints.items():
-        bad = df.filter(~F.expr(expr)).limit(1).count()
-        if bad:
+    """Raise if any row violates a CHECK constraint, checking every
+    constraint in one aggregate job (none without constraints). SQL CHECK
+    semantics: a row violates only when the expression is FALSE — NULL
+    passes."""
+    if not constraints:
+        return
+    names = list(constraints)
+    bad = df.agg(*[F.count_if(~F.expr(constraints[n])) for n in names]).first()
+    for name, n_bad in zip(names, bad):
+        if n_bad:
             raise ValueError(
-                f"CHECK constraint {name!r} ({expr}) violated by incoming data"
+                f"CHECK constraint {name!r} ({constraints[name]}) violated by incoming data"
             )
 
 

@@ -107,10 +107,13 @@ def write_jdbc(
     mode: str = "append",
     batchsize: int = 10_000,
     num_partitions: int | None = None,
-) -> None:  # pragma: no cover - needs a live Postgres + driver jar
+) -> None:
     """Distributed JDBC write: every executor streams typed batches —
     replaces the reference's collect-all → VALUES-literal → psql pipeline
-    (delta_to_postgres_scd.py:183-227) and its single-process ceiling."""
+    (delta_to_postgres_scd.py:183-227) and its single-process ceiling.
+    The JDBC driver for ``url`` must be on Spark's classpath (Postgres
+    for the Lakebase sink; the tests use the embedded Derby that ships
+    with Spark)."""
     if num_partitions:
         df = df.repartition(num_partitions)
     (

@@ -44,3 +44,32 @@ def count_jobs(spark):
         return out, len(sc.statusTracker().getJobIdsForGroup(group))
 
     return run
+
+
+# Every driver-or-distributed regime cap, as "module.attribute". With all
+# of them at 0, every operator with a driver kernel takes its distributed
+# path (``collect_if_small`` returns None without a job for a cap <= 0).
+# ``delta_log._MERGE_KEYSET_CAP`` is not among them: it picks how a merge
+# prunes files (exact key set or min/max envelope), which both regimes
+# share, so forcing it would change which files a merge rewrites.
+REGIME_CAPS = [
+    "delta_unity_duckdb_spark.operators.graph.SMALL_GRAPH_EDGES",
+    "delta_unity_duckdb_spark.operators.dedup.EMB_DRIVER_MAX_VECTORS",
+    "delta_unity_duckdb_spark.operators.clustering.SMALL_KMEANS_ROWS",
+    "delta_unity_duckdb_spark.operators.bpe.BPE_DRIVER_MAX_VOCAB",
+    "delta_unity_duckdb_spark.workload.graphq.TRI_DRIVER_MAX_ROWS",
+    "delta_unity_duckdb_spark.sources.delta_log._MERGE_DRIVER_ROWS",
+]
+
+
+@pytest.fixture
+def force_distributed(monkeypatch):
+    """``force_distributed()`` sets every regime cap to 0 for the rest of
+    the test, so a test can run one input through both regimes."""
+
+    def apply():
+        for cap in REGIME_CAPS:
+            monkeypatch.setattr(cap, 0)
+
+    return apply
+

@@ -2,7 +2,9 @@
 committing operation's log entry, pinned field for field, and the
 concurrency rule for a commit that loses the version race (only a blind
 append moves past a foreign commit, never past one that changes metaData
-or protocol, and a MERGE is never a blind append). Also: partition directories holding
+or protocol, and a MERGE is never a blind append). The format pin and
+the MERGE race run in both regimes (the ``force_distributed`` switch).
+Also: partition directories holding
 ``__HIVE_DEFAULT_PARTITION__`` convert as NULL, the latest version is read
 from a checkpoint when its JSON commits are gone, and a failed data
 write leaves no staging directory behind."""
@@ -244,13 +246,20 @@ def _run_ops(spark, tmp_path):
     return shapes
 
 
-def test_commit_format_pinned(spark, tmp_path):
-    shapes = _run_ops(spark, tmp_path)
-    assert sorted(shapes) == sorted(EXPECTED)
-    for name, want in EXPECTED.items():
-        assert shapes[name] == want, name
-        # field order of the JSON record too
-        assert list(shapes[name]["commitInfo"]) == list(want["commitInfo"]), name
+def test_commit_format_pinned(spark, tmp_path, force_distributed):
+    """Every commit's shape, in both regimes: the driver and the
+    distributed MERGE write the same actions."""
+    for regime in ("driver", "distributed"):
+        if regime == "distributed":
+            force_distributed()
+        shapes = _run_ops(spark, tmp_path / regime)
+        assert sorted(shapes) == sorted(EXPECTED)
+        for name, want in EXPECTED.items():
+            assert shapes[name] == want, (regime, name)
+            # field order of the JSON record too
+            assert list(shapes[name]["commitInfo"]) == list(want["commitInfo"]), (
+                regime, name
+            )
 
 
 def _rows(df):
@@ -304,18 +313,23 @@ def test_append_retries_past_foreign_append(spark, tmp_path, monkeypatch):
     ]
 
 
-def test_insert_only_merge_refuses_to_commit_past_foreign_append(spark, tmp_path, monkeypatch):
+def test_insert_only_merge_refuses_to_commit_past_foreign_append(
+    spark, tmp_path, monkeypatch, force_distributed
+):
     """A merge that matched no file adds only, but it read the table to find
     that nothing matched; retried past a foreign append of the same keys it
-    would insert them twice."""
-    t = str(tmp_path / "race_mg")
-    # one file whose key range [0, 4] misses every source key: nothing to remove
-    D.write_delta(spark.range(0, 5, numPartitions=1), t)
-    _lose_race_to(monkeypatch, lambda: D.write_delta(spark.range(100, 102), t))
-    with pytest.raises(D.DeltaProtocolError, match="concurrent commit"):
-        D.merge_delta(spark.range(100, 102), t, on=["id"])
-    assert D.table_version(t) == 1
-    assert _rows(D.read_delta(spark, t)) == [0, 1, 2, 3, 4, 100, 101]
+    would insert them twice. Both regimes stage through ``_stage_files``."""
+    for regime in ("driver", "distributed"):
+        if regime == "distributed":
+            force_distributed()
+        t = str(tmp_path / f"race_mg_{regime}")
+        # one file whose key range [0, 4] misses every source key: nothing to remove
+        D.write_delta(spark.range(0, 5, numPartitions=1), t)
+        _lose_race_to(monkeypatch, lambda: D.write_delta(spark.range(100, 102), t))
+        with pytest.raises(D.DeltaProtocolError, match="concurrent commit"):
+            D.merge_delta(spark.range(100, 102), t, on=["id"])
+        assert D.table_version(t) == 1
+        assert _rows(D.read_delta(spark, t)) == [0, 1, 2, 3, 4, 100, 101]
 
 
 def test_partition_values_read_as_written(spark, tmp_path):

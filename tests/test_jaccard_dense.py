@@ -231,3 +231,35 @@ def test_knn_join_zero_norm_candidate_is_null_not_nan(spark):
     assert len(ids) == 3
     sims = {r["vec_id"]: r["cosine_sim"] for r in rows}
     assert sims[1] == 1.0
+
+
+def test_dedup_topk_probes_the_universe_once(spark, sf_dir, monkeypatch, count_jobs):
+    """The set-dedup regime collects the element universe once and hands
+    that table, and its mask count as the user count, to the tile kernel.
+    Probing the universe again for the mask rows and counting their users
+    cost five more jobs: 20 per call on this fixture before, 15 after."""
+    import delta_unity_duckdb_spark.operators.similarity as S
+    from delta_unity_duckdb_spark.sources.tables import load_table
+
+    e = load_table(spark, sf_dir, "events")
+    uk = (
+        e.filter(F.col("props").isNotNull())
+        .select("user_id", F.regexp_extract("props", "[0-9]+", 0).cast("bigint").alias("k"))
+        .distinct()
+        .localCheckpoint()
+    )
+    want = [tuple(r) for r in S.jaccard_topk_pairs_dedup(uk, top_k=50).collect()]
+    probes = []
+    real = S.collect_if_small
+
+    def spy(df, cap):
+        probes.append(cap)
+        return real(df, cap)
+
+    monkeypatch.setattr(S, "collect_if_small", spy)
+    got, n = count_jobs(
+        lambda: [tuple(r) for r in S.jaccard_topk_pairs_dedup(uk, top_k=50).collect()]
+    )
+    assert got == want and len(got) == 50
+    assert probes == [4096]
+    assert n <= 15, n

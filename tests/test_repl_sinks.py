@@ -12,6 +12,7 @@ from delta_unity_duckdb_spark.sources.sinks import (
     generate_oauth_token,
     pg_connection_string,
     pg_jdbc_url,
+    write_jdbc,
     write_table,
 )
 
@@ -83,3 +84,19 @@ def test_write_table_partitioned(spark, sf_dir, tmp_path):
     # hive-partition pruning: reading one partition touches one directory
     one = back.filter(F.col("n_regionkey") == 0)
     assert "PartitionFilters: [isnotnull(n_regionkey" in one._jdf.queryExecution().executedPlan().toString() or one.count() > 0
+
+
+def test_write_jdbc_round_trip_in_memory_derby(spark):
+    """``write_jdbc`` through a real JDBC driver: Spark ships the embedded
+    Derby, whose in-memory database needs no server. Ids past 2**53,
+    NULLs and doubles read back exactly, and ``append`` adds rows."""
+    rows = [(2**53 + 1, 0.1, "a"), (None, None, None), (-7, 1 / 3, "é"), (3, -2.5e10, "x")]
+    df = spark.createDataFrame(rows, "id long, x double, s string")
+    url = "jdbc:derby:memory:sinks_write_jdbc;create=true"
+    props = {"user": "tester", "password": "pw"}
+    write_jdbc(df, url, "T1", "tester", "pw", mode="overwrite", num_partitions=2)
+    back = spark.read.jdbc(url, "T1", properties=props)
+    assert back.schema.simpleString() == df.schema.simpleString()
+    assert sorted(back.collect(), key=str) == sorted(df.collect(), key=str)
+    write_jdbc(df.filter("id = 3"), url, "T1", "tester", "pw")
+    assert spark.read.jdbc(url, "T1", properties=props).filter("id = 3").count() == 2

@@ -1,8 +1,9 @@
 """``near_dup_clusters`` and ``graph_kcore`` must give the same rows in
-both regimes: the driver regime (default ``graph.SMALL_GRAPH_EDGES``) and
-the distributed one (cap set to 0). Each case also checks which regime
-the default run took, so the comparison is never between two runs of
-the same path."""
+both regimes: the driver regime (the default caps) and the distributed
+one (every regime cap set to 0 by the ``force_distributed`` switch). Each
+case runs its input through both regimes and checks which regime the
+default run took, so the comparison is never between two runs of the
+same path."""
 
 from __future__ import annotations
 
@@ -40,7 +41,7 @@ def _spy(monkeypatch, module, name):
     return calls
 
 
-def _clusters_both_regimes(monkeypatch, df, id_col="doc_id"):
+def _clusters_both_regimes(monkeypatch, force_distributed, df, id_col="doc_id"):
     """(driver-regime rows, distributed rows, _driver_pairs results)."""
     calls = _spy(monkeypatch, D, "_driver_pairs")
 
@@ -49,7 +50,7 @@ def _clusters_both_regimes(monkeypatch, df, id_col="doc_id"):
         return Counter(tuple(r) for r in out)
 
     fast = rows()
-    monkeypatch.setattr(G, "SMALL_GRAPH_EDGES", 0)
+    force_distributed()
     dist = rows()
     return fast, dist, calls
 
@@ -58,21 +59,21 @@ def _docs(spark, rows, id_type="long"):
     return spark.createDataFrame(rows, f"doc_id {id_type}, text string")
 
 
-def test_near_dup_clusters_regimes_on_fixture(spark, sf_dir, monkeypatch):
+def test_near_dup_clusters_regimes_on_fixture(spark, sf_dir, monkeypatch, force_distributed):
     docs = load_table(spark, sf_dir, "documents")
-    fast, dist, calls = _clusters_both_regimes(monkeypatch, docs)
+    fast, dist, calls = _clusters_both_regimes(monkeypatch, force_distributed, docs)
     assert len(calls) == 1 and calls[0][1] is not None  # driver regime taken
     assert fast == dist
     assert sum(n for (_, _, surv), n in fast.items() if not surv) > 0
 
 
-def test_near_dup_clusters_regimes_with_oversized_bucket(spark, monkeypatch):
+def test_near_dup_clusters_regimes_with_oversized_bucket(spark, monkeypatch, force_distributed):
     # 1001 identical short docs fill every band bucket past
     # max_bucket_size (1000): those buckets are dropped, the docs stay
     # singletons; a real near-dup pair elsewhere still clusters
     rows = [(i, "same short boilerplate line") for i in range(1001)]
     rows += [(5000, LONG), (5001, LONG + " extra"), (5002, OTHER)]
-    fast, dist, calls = _clusters_both_regimes(monkeypatch, _docs(spark, rows))
+    fast, dist, calls = _clusters_both_regimes(monkeypatch, force_distributed, _docs(spark, rows))
     assert calls[0][1] is not None
     assert fast == dist
     assert fast[(5001, 5000, False)] == 1
@@ -92,7 +93,9 @@ def test_driver_pairs_refuses_more_pairs_than_the_cap(spark):
     ]
 
 
-def test_near_dup_clusters_regimes_with_nulls_and_short_docs(spark, monkeypatch):
+def test_near_dup_clusters_regimes_with_nulls_and_short_docs(
+    spark, monkeypatch, force_distributed
+):
     rows = [
         (1, LONG),
         (2, LONG + " extra"),
@@ -104,7 +107,7 @@ def test_near_dup_clusters_regimes_with_nulls_and_short_docs(spark, monkeypatch)
         (7, OTHER),
         (8, OTHER + " again"),
     ]
-    fast, dist, calls = _clusters_both_regimes(monkeypatch, _docs(spark, rows))
+    fast, dist, calls = _clusters_both_regimes(monkeypatch, force_distributed, _docs(spark, rows))
     assert calls[0][1] is not None
     assert fast == dist
     assert fast[(None, None, None)] == 1
@@ -112,32 +115,32 @@ def test_near_dup_clusters_regimes_with_nulls_and_short_docs(spark, monkeypatch)
     assert {(i, c) for (i, c, _) in fast if i in (4, 5, 6)} == {(4, 4), (5, 5), (6, 6)}
 
 
-def test_near_dup_clusters_string_ids_stay_distributed(spark, monkeypatch):
+def test_near_dup_clusters_string_ids_stay_distributed(spark, monkeypatch, force_distributed):
     rows = [("a", LONG), ("b", LONG + " extra"), ("c", OTHER)]
     fast, dist, calls = _clusters_both_regimes(
-        monkeypatch, _docs(spark, rows, "string")
+        monkeypatch, force_distributed, _docs(spark, rows, "string")
     )
     assert calls == []  # the driver regime is never tried
     assert fast == dist
     assert fast[("b", "a", False)] == 1
 
 
-def _kcore_both_regimes(spark, sf_dir, monkeypatch):
+def _kcore_both_regimes(spark, sf_dir, monkeypatch, force_distributed):
     calls = _spy(monkeypatch, G, "_kcore_prune")
     fast = graph_kcore(spark, sf_dir).collect()
-    monkeypatch.setattr(G, "SMALL_GRAPH_EDGES", 0)
+    force_distributed()
     dist = graph_kcore(spark, sf_dir).collect()
     return [tuple(r) for r in fast], [tuple(r) for r in dist], calls
 
 
-def test_graph_kcore_regimes_on_fixture(spark, sf_dir, monkeypatch):
-    fast, dist, calls = _kcore_both_regimes(spark, sf_dir, monkeypatch)
+def test_graph_kcore_regimes_on_fixture(spark, sf_dir, monkeypatch, force_distributed):
+    fast, dist, calls = _kcore_both_regimes(spark, sf_dir, monkeypatch, force_distributed)
     assert len(calls) == 1  # driver regime in the default run only
     assert fast == dist
     assert fast[0][0] > 0
 
 
-def test_graph_kcore_regimes_prune_to_nothing(spark, tmp_path, monkeypatch):
+def test_graph_kcore_regimes_prune_to_nothing(spark, tmp_path, monkeypatch, force_distributed):
     # 40 orders of 4 parts each: the sampled co-occurrence graph has
     # edges, but every degree is far below 6, so the 6-core is empty
     orders = [o for o in range(40) for _ in range(4)]
@@ -146,7 +149,7 @@ def test_graph_kcore_regimes_prune_to_nothing(spark, tmp_path, monkeypatch):
         pa.table({"l_orderkey": orders, "l_partkey": parts}),
         str(tmp_path / "lineitem.parquet"),
     )
-    fast, dist, calls = _kcore_both_regimes(spark, str(tmp_path), monkeypatch)
+    fast, dist, calls = _kcore_both_regimes(spark, str(tmp_path), monkeypatch, force_distributed)
     (src_in, _, _, _), (src_out, _) = calls[0]
     assert len(calls) == 1 and len(src_in) > 0 and len(src_out) == 0
     assert fast == dist == [(0, 0, 0, 0)]
@@ -156,7 +159,7 @@ def test_graph_kcore_regimes_prune_to_nothing(spark, tmp_path, monkeypatch):
 A, B, C = 2**53 + 1, 2**53 + 3, 2**53 + 5
 
 
-def test_64_bit_ids_survive_both_regimes(spark, monkeypatch):
+def test_64_bit_ids_survive_both_regimes(spark, monkeypatch, force_distributed):
     """Ids near 2**53 beside a NULL endpoint: every driver kernel reads
     them exactly, so each gives the distributed regime's rows, and those
     rows hold only input ids."""
@@ -187,8 +190,7 @@ def test_64_bit_ids_survive_both_regimes(spark, monkeypatch):
     fast = run()
     cand = D._cosine_candidates_driver(vecs, "id", "v", 0.99)
     assert len(cc_calls) == 1 and len(core_calls) == 1  # driver regime taken
-    monkeypatch.setattr(G, "SMALL_GRAPH_EDGES", 0)
-    monkeypatch.setattr(D, "EMB_DRIVER_MAX_VECTORS", 0)
+    force_distributed()
     dist = run()
     assert D._cosine_candidates_driver(vecs, "id", "v", 0.99) is None
 
@@ -201,12 +203,14 @@ def test_64_bit_ids_survive_both_regimes(spark, monkeypatch):
     assert fast["dedup"] == Counter([(A,), (B,), (None,)])  # C duplicates A
 
 
-def test_graph_kcore_probes_once_above_the_cap(spark, sf_dir, monkeypatch, count_jobs):
+def test_graph_kcore_probes_once_above_the_cap(
+    spark, sf_dir, monkeypatch, force_distributed, count_jobs
+):
     """Above the cap, graph_kcore's own probe is the only one: the
     distributed rounds run without graph.kcore probing the edges again."""
     # driver regime; also leaves the table's one-time load jobs behind
     fast = graph_kcore(spark, sf_dir).collect()
-    monkeypatch.setattr(G, "SMALL_GRAPH_EDGES", 0)
+    force_distributed()
     no_probe, n0 = count_jobs(lambda: graph_kcore(spark, sf_dir).collect())
     monkeypatch.setattr(G, "SMALL_GRAPH_EDGES", 1)
     one_probe, n1 = count_jobs(lambda: graph_kcore(spark, sf_dir).collect())
@@ -214,7 +218,7 @@ def test_graph_kcore_probes_once_above_the_cap(spark, sf_dir, monkeypatch, count
     assert n1 == n0 + 1, (n0, n1)
 
 
-def test_descendants_regimes_and_driver_jobs(spark, monkeypatch, count_jobs):
+def test_descendants_regimes_and_driver_jobs(spark, monkeypatch, force_distributed, count_jobs):
     """Every path emits (duplicate edges twice), a NULL node is emitted
     and never expands, ids past 2**53 stay exact; the driver regime is
     the probe plus the roots collect."""
@@ -227,7 +231,7 @@ def test_descendants_regimes_and_driver_jobs(spark, monkeypatch, count_jobs):
         return Counter(tuple(r) for r in G.descendants(edges, roots, max_depth=6).collect())
 
     fast, jobs = count_jobs(rows)
-    monkeypatch.setattr(G, "SMALL_GRAPH_EDGES", 0)
+    force_distributed()
     dist = rows()
     assert fast == dist == Counter(
         {(A, A, 0): 1, (None, None, 0): 1, (A, B, 1): 2, (A, C, 2): 2, (A, None, 3): 2}

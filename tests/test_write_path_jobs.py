@@ -1,10 +1,13 @@
 """Spark jobs launched by the Delta / SCD2 write path, pinned as upper
 bounds through status-tracker job groups. Log metadata — a snapshot of a
-checkpointed table, writing the checkpoint — launches no job at all; a
-small MERGE and an SCD2 sync stay a handful each (a MERGE is one grouped
-key probe and one write job, a sync one write job, each split into a
-job per stage by AQE). The earlier probe-count-and-rewrite formulation
-took 15 and 10 here."""
+checkpointed table, writing the checkpoint — launches no job at all. A
+small MERGE in the driver regime is two jobs: the key-only probe and the
+source collect, after which pyarrow rewrites the touched files. In the
+distributed regime (every regime cap at 0) a MERGE is the key probe and
+one write job, and an SCD2 sync one write job, each split into a job per
+stage by AQE, so they stay within ``MERGE_MAX_JOBS`` and
+``SYNC_MAX_JOBS``. The earlier probe-count-and-rewrite formulation took
+15 and 10 here."""
 
 from __future__ import annotations
 
@@ -14,6 +17,7 @@ from delta_unity_duckdb_spark.operators.scd2 import sync_scd2
 from delta_unity_duckdb_spark.sources import delta_log as D
 
 MERGE_MAX_JOBS = 8
+MERGE_DRIVER_MAX_JOBS = 2
 SYNC_MAX_JOBS = 8
 
 
@@ -36,12 +40,15 @@ def test_checkpoint_write_and_read_launch_no_job(spark, tmp_path, count_jobs):
     assert count_jobs(lambda: D.write_checkpoint(spark, t)) == (2, 0)
 
 
-def test_small_merge_job_bound(spark, tmp_path, count_jobs):
-    t = _table(spark, tmp_path)
+def test_small_merge_job_bound(spark, tmp_path, count_jobs, force_distributed):
     src = spark.createDataFrame([(5, -5), (150, -150), (900, -900)], "id long, v long")
-    out, n = count_jobs(lambda: D.merge_delta(src, t, on=["id"]))
-    assert (out["rows_matched"], out["files_rewritten"]) == (2, 2)
-    assert n <= MERGE_MAX_JOBS, n
+    for regime, bound in (("driver", MERGE_DRIVER_MAX_JOBS), ("distributed", MERGE_MAX_JOBS)):
+        if regime == "distributed":
+            force_distributed()
+        t = _table(spark, tmp_path / regime)
+        out, n = count_jobs(lambda: D.merge_delta(src, t, on=["id"]))
+        assert (out["rows_matched"], out["files_rewritten"]) == (2, 2)
+        assert n <= bound, (regime, n)
 
 
 def test_sync_scd2_job_bound(spark, tmp_path, count_jobs):
